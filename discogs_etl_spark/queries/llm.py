@@ -453,11 +453,12 @@ def gate_control_quadratic_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-factorable (no marginal-sum shortcut exists) and every pair
     must actually be enumerated and hashed.
 
-    Calibration (r19, min-of-5 quiet, local[32]): 0.76 s at sf0.01
-    (125k pairs) -> 6.5 s at sf0.1 (2M pairs), alpha ~1.55 against the
-    embeddings plane's 4x growth — above ALPHA_FLAG = 1.35 with ~0.2
-    margin, material at the high sf, above the overhead floor at the
-    low sf.  Any rewrite that accelerates this query defeats the
+    Calibration (r19, local[32], min-of-3 per sf — the one sweep run
+    plus two re-runs scripts/time_registry.py records for controls,
+    the readings the gate compares): 0.559 s at sf0.01 (125k pairs)
+    -> 5.932 s at sf0.1 (2M pairs), alpha 1.70 against the embeddings
+    plane's 4x growth — above ALPHA_FLAG = 1.35 with ~0.35 margin,
+    material at the high sf, above the overhead floor at the low sf.  Any rewrite that accelerates this query defeats the
     gate's calibration and reddens tests/test_scale_exponents.py's
     stale-allowance check; the correct response to that red is a NEW
     measured control, never a silent allowance edit."""

@@ -1,56 +1,29 @@
 """Derive driver-evidence counts from the CORRECTNESS_r*.json artifacts.
 
-Three rounds running, the hand-typed evidence counts in the registry
-rotation note / SCALE_NOTES were off by one.  This script computes them
-from the ground truth instead: the per-round driver artifacts plus the
-live registry.  The rotation note and SCALE_NOTES must quote this
-output; ``tests/test_evidence_audit.py`` asserts the quoted numbers
-match.
+Counts, the never-checked backlog, the oldest-evidence-first order and
+the freshness-SLO helpers are all computed from the per-round driver
+artifacts plus the live registry; nothing is hand-typed.  Artifact
+parsing and the rotation order live in ``discogs_etl_spark.registry``
+(``all_specs`` serves the registry in that order, so the driver's
+window is its first 50 names); this script summarizes them.
 
 Usage::
 
     python scripts/evidence_audit.py            # human summary
     python scripts/evidence_audit.py --json     # machine-readable
     python scripts/evidence_audit.py --never    # list never-checked names
+    python scripts/evidence_audit.py --stale-order   # the rotation order
     python scripts/evidence_audit.py --max-round 6   # bound the basis
-
-The registry rotation note quotes this output together with the round it
-was computed over (``as_of_round=N``); ``tests/test_evidence_audit.py``
-recomputes ``audit(max_round=N)`` and asserts the quoted tuple matches.
-Bounding the basis by round is what keeps the suite green after the NEXT
-round's CORRECTNESS artifact lands: the note describes a fixed historical
-basis, not "whatever files are on disk today" (the round-6 guard compared
-against the unbounded audit, so the driver landing CORRECTNESS_r06.json
-retroactively broke the build).
 """
 
 from __future__ import annotations
 
 import argparse
 import json
-import re
 import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
-
-
-def _round_artifacts(repo: Path = REPO) -> list[tuple[int, Path]]:
-    out = []
-    for p in sorted(repo.glob("CORRECTNESS_r*.json")):
-        m = re.match(r"CORRECTNESS_r(\d+)\.json$", p.name)
-        if m:
-            out.append((int(m.group(1)), p))
-    return sorted(out)
-
-
-def _is_green(row: dict) -> bool:
-    # Oracle-backed rows carry all three match flags; rows-only checks
-    # (oracle=None) at minimum carry rows_match.  err must be absent/null.
-    if row.get("err"):
-        return False
-    flags = [v for k, v in row.items() if k.endswith("_match")]
-    return bool(flags) and all(flags)
 
 
 def audit(
@@ -60,58 +33,35 @@ def audit(
 ) -> dict:
     """Compute evidence stats.  Importable for tests.
 
-    ``max_round`` bounds the basis to artifacts from rounds <= N so a
-    note stamped ``as_of_round=N`` stays verifiable (and the test suite
-    stays green) after later rounds' artifacts land.  ``artifacts_dir``
-    lets tests point at a synthetic artifact set without touching the
-    repo; the registry is always imported from ``repo``.
+    ``max_round`` bounds the basis to artifacts from rounds <= N.
+    ``artifacts_dir`` lets tests point at a synthetic artifact set
+    without touching the repo; the registry is always imported from
+    ``repo``.
     """
-    rounds = _round_artifacts(artifacts_dir or repo)
+    sys.path.insert(0, str(repo))
+    from discogs_etl_spark import registry
+
+    per_round = registry.green_by_round(artifacts_dir or repo)
     if max_round is not None:
-        rounds = [(n, p) for n, p in rounds if n <= max_round]
-    per_round: dict[int, dict[str, bool]] = {}
-    for n, path in rounds:
-        data = json.loads(path.read_text())
-        per_round[n] = {name: _is_green(row) for name, row in data.items()}
+        per_round = {n: g for n, g in per_round.items() if n <= max_round}
+    last_green = registry.last_green_round(per_round)
+    ever_green = set(last_green)
 
     checked: set[str] = set()
-    ever_green: set[str] = set()
-    last_green: dict[str, int] = {}
     net_new_last = []
-    last_round = max(per_round) if per_round else 0
+    last_round = max(per_round, default=0)
     for n in sorted(per_round):
         names = set(per_round[n])
         if n == last_round:
             net_new_last = sorted(names - checked)
         checked |= names
-        for name, ok in per_round[n].items():
-            if ok:
-                ever_green.add(name)
-                last_green[name] = n
 
-    sys.path.insert(0, str(repo))
-    from discogs_etl_spark import registry
-
-    specs = registry.all_specs()
-    registered = set(specs)
-    never_checked = sorted(registered - checked)
-    # CANONICAL registration order (import-order-independent, see
-    # registry.registration_order), ignoring the rotation window, so
-    # the "next 50" plan is reproducible in any process — including a
-    # pytest session whose earlier tests imported query modules in a
-    # different order than _load_all (that pollution flipped the
-    # round-10 tie cohort's order in r18 and falsely reddened the
-    # window-composition gate).
-    reg_order = [n for n in registry.registration_order() if n in registered]
-    never_in_order = [n for n in reg_order if n not in checked]
-    # Post-backlog rotation basis: registered names ordered by how STALE
-    # their driver evidence is — last-green round ascending, registration
-    # order among ties.  Never-checked / never-green names sort first
-    # (last_green absent → round 0).  round_start.py fills the window
-    # from this list once the never-checked backlog is empty, so driver
-    # evidence keeps refreshing oldest-first instead of going static.
-    reg_index = {n: i for i, n in enumerate(reg_order)}
-    stale_order = sorted(reg_order, key=lambda n: (last_green.get(n, 0), reg_index[n]))
+    # Oldest-evidence-first over canonical registration order — the
+    # order ``registry.all_specs`` serves, so its first 50 names are
+    # the driver's next window.
+    stale_order = registry.stale_order(last_green)
+    registered = set(stale_order)
+    never_checked = [n for n in stale_order if n not in checked]
 
     return {
         "rounds": sorted(per_round),
@@ -122,7 +72,7 @@ def audit(
         "never_checked": len(never_checked),
         "net_new_last_round": len(net_new_last),
         "net_new_last_round_names": net_new_last,
-        "never_checked_names": never_in_order,
+        "never_checked_names": never_checked,
         "stale_order_names": stale_order,
         "last_green_round": last_green,
         "checked_not_registered": sorted(checked - registered),
@@ -132,8 +82,8 @@ def audit(
         # pads it — don't make correctness depend on the separate
         # checked_not_registered gate.  Never-green means CHECKED and
         # red on every attempt (a defect); never-CHECKED names are a
-        # separate population the window-composition gate forces to the
-        # front of the rotation — stale_names' docstring has always
+        # separate population the computed order puts at the front of
+        # the rotation — stale_names' docstring has always
         # drawn this distinction, but the set here was computed as
         # registered - ever_green, which also swept up names registered
         # mid-round before their first driver window (found in r16, the
@@ -144,19 +94,9 @@ def audit(
     }
 
 
-# Evidence-freshness enforcement (verdict r13 task #1).  The rotation
-# that keeps the ledger trustworthy was convention until round 14; these
-# helpers make it a suite gate (tests/test_evidence_freshness.py), the
-# same script-owned-logic/thin-test pattern as timing_compare/plan_sweep.
-
-# A window legitimately leads with mechanically re-windowed names
-# (rewindow_check.py flags) before the oldest-evidence-first fill.  The
-# largest flag block on record is 14 (round 11's empty-input hardening);
-# cap it at half the window so a tuple of 50 arbitrary fresh names can
-# never masquerade as "all flags".  If a round genuinely re-windows more
-# than 25 registered queries, raise this WITH the rationale in the
-# commit message.
-MAX_FLAG_BLOCK = 25
+# Evidence-freshness enforcement (verdict r13 task #1): these helpers
+# back the suite gate in tests/test_evidence_freshness.py, the same
+# script-owned-logic/thin-test pattern as timing_compare/plan_sweep.
 
 
 def stale_names(stats: dict, bound: int) -> list[str]:
@@ -165,10 +105,10 @@ def stale_names(stats: dict, bound: int) -> list[str]:
 
     Names WITHOUT a last-green round are exempt here, which covers two
     distinct populations (r14 review): never-CHECKED names carry no
-    evidence by definition and the window-composition check forces them
-    to the front of the rotation (they sort as round 0 in stale order),
-    so they cannot hide; never-GREEN names (checked, red on every
-    attempt) are a DEFECT, not a freshness problem, and are gated
+    evidence by definition and sort as round 0, i.e. to the front of
+    the computed window, so they cannot hide; never-GREEN names
+    (checked, red on every attempt) are a DEFECT, not a freshness
+    problem, and are gated
     separately by ``test_every_registered_query_has_green_evidence``
     (ever_green == registered on the unbounded basis) so they cannot
     ride this exemption either.  An empty return means the freshness
@@ -189,17 +129,10 @@ def endangered_names(stats: dict, bound: int) -> list[str]:
     names the CURRENT window must contain for the staleness SLO to be
     satisfiable at all.
 
-    This is what reconciles the SLO with the flag block (r14 review):
-    the SLO's ``ceil(registered / 50)`` derivation assumes every window
-    slot rotates, but up to ``MAX_FLAG_BLOCK`` slots may legitimately
-    re-check fresh names after a re-window.  Requiring endangered ⊆
-    window turns that tension into a composition-time error — a flag
-    block so large it would push a name past the SLO reddens THIS round
-    (split the change, or consciously raise the bound), instead of the
-    SLO tripping rounds later with every intervening window "valid".
     Endangered names are by construction the head of ``stale_order``,
-    so a window composed per ``window_flag_split`` only misses them
-    when the flag block crowds them out.
+    so the computed window (``list(registry.all_specs())[:50]``) holds
+    them whenever fewer than 50 are endangered at once — the case the
+    ``ceil(registered / 50)`` bound guarantees under full rotation.
     """
     newest = max(stats["rounds"], default=0)
     last_green = stats["last_green_round"]
@@ -210,43 +143,6 @@ def endangered_names(stats: dict, bound: int) -> list[str]:
     )
 
 
-def window_flag_split(
-    window: tuple[str, ...] | list[str],
-    stale_order: list[str],
-    max_flag_block: int = MAX_FLAG_BLOCK,
-) -> int | None:
-    """Smallest ``k`` such that ``window[k:]`` is exactly the
-    oldest-evidence-first fill over ``stale_order`` after excluding the
-    leading ``k`` flag names — or ``None`` if no ``k <= max_flag_block``
-    satisfies it (the tuple is mis-rotated: out of order, skips a stale
-    name, or contains fresh names beyond the allowed flag block).
-
-    Two honest limits (r14 review), both bounded rather than closed:
-
-    * The flag block itself is TRUST-based — its names come from
-      ``rewindow_check`` against a base rev this static check cannot
-      reproduce, so up to ``max_flag_block`` leading names are accepted
-      unverified.  The damage is bounded, not eliminated: the fill
-      still rotates ``len(window) - k`` genuinely-oldest names, and the
-      companion endangered-names check (``endangered_names``) rejects
-      any window whose flag block crowds out a name the staleness SLO
-      needs this round.
-    * A match is only accepted when the fill is NON-EMPTY (or there is
-      genuinely nothing to fill from): without that, any window no
-      longer than ``max_flag_block`` would validate vacuously —
-      ``k = len(window)`` makes both sides of the comparison empty.
-    """
-    w = list(window)
-    for k in range(0, min(len(w), max_flag_block) + 1):
-        flags = set(w[:k])
-        fill = [n for n in stale_order if n not in flags][: len(w) - k]
-        if w[k:] == fill:
-            if not fill and any(n not in flags for n in stale_order):
-                continue  # vacuous: whole window absorbed as "flags"
-            return k
-    return None
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--json", action="store_true")
@@ -255,8 +151,8 @@ def main() -> None:
         "--stale-order",
         action="store_true",
         help="list ALL registered names oldest-evidence-first (last-green "
-        "round ascending, registration order among ties) — the rotation "
-        "basis round_start.py fills the post-backlog window from",
+        "round ascending, registration order among ties) — the order "
+        "registry.all_specs serves, whose first 50 are the driver window",
     )
     ap.add_argument("--max-round", type=int, default=None, help="bound the basis to rounds <= N")
     args = ap.parse_args()

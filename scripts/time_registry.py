@@ -142,10 +142,11 @@ def main() -> int:
     # The scale-exponent gate's positive control must read its true
     # compute at BOTH sfs or the fitted alpha rides cold-start noise:
     # a single cold run adds ~1 s of codegen/JIT to the LO reading
-    # (measured: 1.77 s cold vs 0.76 s min-of-5 for
-    # gate_control_quadratic_join at sf0.01), which alone deflates a
-    # true alpha ~1.55 to ~0.94 — under the flag the control exists to
-    # trip, failing the stale-allowance test spuriously.  Same
+    # (measured: 1.77 s cold vs the 0.559 s min-of-3 the r19 sweep
+    # recorded for gate_control_quadratic_join at sf0.01), which alone
+    # deflates its alpha from 1.70 to under 1.0 — under the flag the
+    # control exists to trip, failing the stale-allowance test
+    # spuriously.  Same
     # discipline as --baseline's verify re-run, applied to the names
     # whose READINGS are load-bearing for the instrument itself; raw
     # runs are persisted under ``_control_runs`` for audit.

@@ -11,7 +11,7 @@ import pytest
 
 from discogs_etl_spark.sources.datasource import register
 from discogs_etl_spark.sources.xml_ingest import ingest_xml
-from tests.test_xml_ingest import MASTER_XML, RELEASE_XML
+from tests.test_xml_ingest import FIXTURES, MASTER_XML, RELEASE_XML
 
 
 @pytest.fixture(scope="module")
@@ -30,6 +30,23 @@ def test_batch_read_matches_ingest_xml(ds, tmp_path):
     via_kernel = ingest_xml(ds, str(dump), "release")
 
     assert via_ds.schema == via_kernel.schema  # inferred from filename
+    a = sorted(via_ds.collect(), key=lambda r: r["id"])
+    b = sorted(via_kernel.collect(), key=lambda r: r["id"])
+    assert a == b
+
+
+@pytest.mark.parametrize("data_type", ["artist", "label", "master"])
+def test_batch_read_matches_ingest_xml_every_entity(ds, tmp_path, data_type):
+    """The other entities through the DataSource's Arrow batches: same
+    schema and rows as ``ingest_xml`` on the dirty fixtures (label
+    newlines, sublabel lists, video embed flags, nested artist structs)."""
+    dump = tmp_path / f"discogs_20240101_{data_type}s.xml.gz"
+    dump.write_bytes(gzip.compress(FIXTURES[data_type]))
+
+    via_ds = ds.read.format("discogs_xml").option("path", str(dump)).load()
+    via_kernel = ingest_xml(ds, str(dump), data_type)
+
+    assert via_ds.schema == via_kernel.schema
     a = sorted(via_ds.collect(), key=lambda r: r["id"])
     b = sorted(via_kernel.collect(), key=lambda r: r["id"])
     assert a == b

@@ -1,27 +1,16 @@
-"""Evidence-count bookkeeping is DERIVED, never hand-typed — and ROUND-STAMPED.
+"""Evidence-count bookkeeping is DERIVED from the CORRECTNESS artifacts.
 
-Three rounds running the registry rotation note / SCALE_NOTES carried
-off-by-one evidence counts, so round 6 made the note quote
-scripts/evidence_audit.py output and added this guard.  But the round-6
-guard compared the note against the UNBOUNDED audit (every
-CORRECTNESS_r*.json on disk), so the moment the driver landed the next
-round's artifact the note went stale and the suite went red — a gate any
-successful round retroactively breaks (verdict r6, defect #1).
-
-The fixed lifecycle: the note's machine-checkable line carries
-``as_of_round=N`` and these tests recompute ``audit(max_round=N)`` —
-a fixed historical basis later artifacts cannot perturb.  A dedicated
-test proves exactly that by injecting a synthetic future-round artifact
-and asserting the bounded audit is unchanged.
+scripts/evidence_audit.py computes every count from the per-round driver
+artifacts plus the live registry; these tests pin its basis handling.
 """
 
 from __future__ import annotations
 
 import importlib.util
-import json
-import re
 import shutil
 from pathlib import Path
+
+from discogs_etl_spark import registry
 
 REPO = Path(__file__).resolve().parent.parent
 
@@ -35,104 +24,15 @@ def _mod():
     return mod
 
 
-def _note_line():
-    """Parse the registry rotation note's machine-checkable audit line."""
-    src = (REPO / "discogs_etl_spark" / "registry.py").read_text()
-    m = re.search(
-        r"evidence_audit as_of_round=(\d+): registered=(\d+) unique_checked=(\d+) "
-        r"ever_green=(\d+) \\\n"
-        r"#\s+never_checked=(\d+) net_new_last_round=(\d+)",
-        src,
-    )
-    assert m, "registry rotation note lost its machine-checkable audit line"
-    groups = tuple(int(g) for g in m.groups())
-    return groups[0], groups[1:]
-
-
-def _stats_tuple(stats):
-    return (
-        stats["registered"],
-        stats["unique_checked"],
-        stats["ever_green"],
-        stats["never_checked"],
-        stats["net_new_last_round"],
-    )
-
-
-def test_rotation_note_counts_match_computed_audit():
-    as_of_round, quoted = _note_line()
-    stats = _mod().audit(REPO, max_round=as_of_round)
-    computed = _stats_tuple(stats)
-    assert quoted == computed, (
-        f"rotation note quotes {quoted} (as_of_round={as_of_round}) but "
-        f"evidence_audit computes {computed} — re-run "
-        f"`python scripts/evidence_audit.py --max-round {as_of_round}` and update the note"
-    )
-
-
-def test_note_basis_covers_all_landed_artifacts():
-    # The note's basis may legitimately trail the newest artifact by ONE
-    # round: the driver lands CORRECTNESS_r{N+1}.json after the round-N
-    # note was committed, and the round-start ritual refreshes the note
-    # as its first act.  A gap of two or more means that ritual was
-    # skipped a full round — that staleness should fail loudly.
-    as_of_round, _ = _note_line()
-    rounds = [n for n, _ in _mod()._round_artifacts(REPO)]
-    assert rounds, "no CORRECTNESS artifacts found"
-    # Allow exactly one landed-but-not-yet-refreshed round so the driver
-    # dropping r{N+1} mid-round can never redden the suite; anything
-    # older means the refresh ritual was skipped a full round.
-    assert max(rounds) - as_of_round <= 1, (
-        f"rotation note basis as_of_round={as_of_round} trails the newest "
-        f"artifact (round {max(rounds)}) by more than one round — refresh the "
-        "note per the round-start ritual"
-    )
-
-
-def test_note_stays_green_when_future_round_artifact_lands(tmp_path):
-    # THE defect class that broke round 6: the driver lands
-    # CORRECTNESS_r{N+1}.json after the note quoting rounds<=N was
-    # committed.  Build an artifact dir = everything on disk PLUS a
-    # synthetic next-round artifact, and assert the bounded audit the
-    # note test uses is bit-identical — the synthetic future cannot
-    # perturb a fixed historical basis.
-    mod = _mod()
-    as_of_round, quoted = _note_line()
-    for _, p in mod._round_artifacts(REPO):
+def test_max_round_bounds_the_basis(tmp_path):
+    # ``--max-round N`` must equal the audit of a tree where rounds > N
+    # never landed.
+    rounds = registry.round_artifacts()
+    newest = rounds[-1][0]
+    for _, p in rounds[:-1]:
         shutil.copy(p, tmp_path / p.name)
-    newest = max(n for n, _ in mod._round_artifacts(REPO))
-    synthetic = {
-        "some_future_query": {"rows_match": True, "schema_match": True, "values_match": True},
-        "users_reactivation_rate": {"rows_match": True, "schema_match": True, "values_match": True},
-    }
-    (tmp_path / f"CORRECTNESS_r{newest + 1:02d}.json").write_text(json.dumps(synthetic))
-    bounded = mod.audit(REPO, max_round=as_of_round, artifacts_dir=tmp_path)
-    assert _stats_tuple(bounded) == quoted, (
-        "a future-round artifact changed the bounded audit — the "
-        "as_of_round basis is not actually fixed"
-    )
-
-
-def test_window_backlog_slice_is_never_driver_checked():
-    from discogs_etl_spark import registry
-
-    as_of_round, _ = _note_line()
-    stats = _mod().audit(REPO, max_round=as_of_round)
-    never = set(stats["never_checked_names"])
-    # the window is a leading changed-this-round block (re-windows, which
-    # may interleave with NEW never-checked queries) followed by pure
-    # never-checked backlog.  Already-evidenced names must therefore form
-    # one contiguous run starting within the first few slots — an
-    # evidenced name deep in the tuple wastes one of the 50 driver slots.
-    idx = [i for i, n in enumerate(registry._WINDOW_PRIORITY) if n not in never]
-    if idx:
-        assert max(idx) - min(idx) + 1 == len(idx), (
-            f"re-windowed names are not contiguous: positions {idx}"
-        )
-        assert min(idx) <= 5, (
-            f"re-windowed block starts at position {min(idx)} — it must "
-            "lead the tuple (only new changed-code queries may precede it)"
-        )
+    mod = _mod()
+    assert mod.audit(REPO, max_round=newest - 1) == mod.audit(REPO, artifacts_dir=tmp_path)
 
 
 def test_audit_sees_no_unregistered_checked_names():

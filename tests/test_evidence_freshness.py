@@ -1,30 +1,25 @@
 """Evidence freshness is MACHINE-ENFORCED, not ritual (verdict r13 #1).
 
-Hash, wall-time, and plan shape have suite gates; until round 14 the
-50-name evidence rotation was the last convention-only gate — a skipped
-or mis-composed window reddened nothing, and the ledger could silently
-go stale.  Two properties close that:
+The driver re-checks the first 50 names of ``registry.all_specs()`` each
+round, and that order is computed from the landed CORRECTNESS artifacts
+(oldest driver evidence first), so the window cannot be skipped or
+mis-composed.  What remains to enforce:
 
 1. STALENESS SLO — no registered query's last driver-green round may
    trail the newest landed CORRECTNESS artifact by more than
    ``registry.MAX_EVIDENCE_AGE_ROUNDS`` rounds.  The bound is derived,
-   not chosen: the driver re-checks 50 names per round, so a correctly
-   rotated registry revisits every name within ceil(registered/50)
-   rounds (369/50 -> 8).  A dedicated test pins the constant to that
-   formula so registry growth forces a conscious update.
+   not chosen: the driver re-checks 50 names per round, so a rotated
+   registry revisits every name within ceil(registered/50) rounds
+   (380/50 -> 8).  A dedicated test pins the constant to that formula
+   so registry growth forces a conscious update.
 
-2. WINDOW COMPOSITION — the CURRENT ``_WINDOW_PRIORITY`` tuple must be
-   a leading flag block (mechanical re-windows, capped at
-   ``evidence_audit.MAX_FLAG_BLOCK``) followed by the byte-exact
-   oldest-evidence-first fill from ``stale_order_names``.  This fails a
-   mis-rotated tuple BEFORE its round lands, not 8 rounds later when
-   the SLO finally trips.
+2. WINDOW COVERAGE — every name that would breach the SLO once the next
+   artifact lands is in the current window, and the window is the head
+   of ``evidence_audit``'s stale order.
 
 Both are driven by scripts/evidence_audit.py (same script-owns-logic /
-thin-test pattern as the timing and plansweep gates), over the note's
-fixed ``as_of_round`` basis for composition (later artifacts cannot
-perturb it) and the unbounded basis for the SLO (freshness is about
-the present).
+thin-test pattern as the timing and plansweep gates) over the unbounded
+basis: freshness is about the present.
 """
 
 from __future__ import annotations
@@ -32,7 +27,6 @@ from __future__ import annotations
 import importlib.util
 import json
 import math
-import re
 from pathlib import Path
 
 from discogs_etl_spark import registry
@@ -47,13 +41,6 @@ def _mod():
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
-
-
-def _as_of_round() -> int:
-    src = (REPO / "discogs_etl_spark" / "registry.py").read_text()
-    m = re.search(r"evidence_audit as_of_round=(\d+):", src)
-    assert m, "registry rotation note lost its audit line"
-    return int(m.group(1))
 
 
 def test_staleness_bound_is_derived_from_registry_size():
@@ -73,9 +60,9 @@ def test_no_registered_query_evidence_exceeds_slo():
     stale = mod.stale_names(stats, registry.MAX_EVIDENCE_AGE_ROUNDS)
     assert stale == [], (
         f"{len(stale)} queries' driver evidence is older than "
-        f"{registry.MAX_EVIDENCE_AGE_ROUNDS} rounds: {stale[:10]} — a "
-        "rotation window was skipped or mis-composed; put these names at "
-        "the front of _WINDOW_PRIORITY"
+        f"{registry.MAX_EVIDENCE_AGE_ROUNDS} rounds: {stale[:10]} — the "
+        "driver skipped rounds or checked a window other than the first "
+        "50 of registry.all_specs()"
     )
 
 
@@ -84,18 +71,18 @@ def test_staleness_check_flags_ancient_evidence(tmp_path):
     # registered name stripped from every round after its first green, so
     # its last-green round goes ancient, and assert stale_names names it.
     mod = _mod()
-    rounds = mod._round_artifacts(REPO)
+    rounds = registry.round_artifacts()
     # any name green in the EARLIEST artifact works as the victim — its
     # first green is old enough to exceed the bound once later rows go
     earliest = json.loads(rounds[0][1].read_text())
     registered = set(registry.all_specs())
     victim = next(
-        n for n, row in earliest.items() if n in registered and mod._is_green(row)
+        n for n, row in earliest.items() if n in registered and registry.is_green(row)
     )
     first_green = None
     for n, p in rounds:
         data = json.loads(p.read_text())
-        if victim in data and first_green is None and mod._is_green(data[victim]):
+        if victim in data and first_green is None and registry.is_green(data[victim]):
             first_green = n
         elif first_green is not None:
             data.pop(victim, None)
@@ -111,78 +98,17 @@ def test_staleness_check_flags_ancient_evidence(tmp_path):
 
 
 def test_window_is_oldest_evidence_first_slice():
-    mod = _mod()
-    stats = mod.audit(REPO, max_round=_as_of_round())
-    k = mod.window_flag_split(registry._WINDOW_PRIORITY, stats["stale_order_names"])
-    assert k is not None, (
-        "_WINDOW_PRIORITY is not a flag-block + oldest-evidence-first "
-        "slice of evidence_audit --stale-order — recompose it with "
-        "scripts/round_start.py"
-    )
-
-
-def test_mis_rotated_tuples_are_rejected():
-    mod = _mod()
-    stats = mod.audit(REPO, max_round=_as_of_round())
-    order = stats["stale_order_names"]
-    window = list(registry._WINDOW_PRIORITY)
-    split = mod.window_flag_split
-
-    # (a) two rotation names swapped out of stale order
-    swapped = list(window)
-    swapped[30], swapped[40] = swapped[40], swapped[30]
-    assert split(swapped, order) is None
-
-    # (b) the stalest name skipped (the window shifted by one) — the
-    # exact failure mode of a skipped/mis-started rotation
-    shifted = [n for n in order if n not in window][:1]
-    assert shifted, "registry smaller than the window?"
-    skipped = window[1:] + shifted
-    assert split(skipped, order) is None
-
-    # (c) a fresh name smuggled into the tail
-    freshest = order[-1]
-    assert freshest not in window
-    smuggled = window[:-1] + [freshest]
-    assert split(smuggled, order) is None
-
-    # (d) 50 arbitrary fresh names cannot masquerade as "all flags"
-    fresh = [n for n in reversed(order) if n not in window][:50]
-    assert split(fresh, order) is None
-
-
-def test_flag_block_composition_is_accepted():
-    # A tuple led by re-window flags drawn from DEEP in the stale order
-    # (i.e. names that are NOT the stalest) must still validate, with the
-    # split landing exactly past the flag block.
-    mod = _mod()
-    stats = mod.audit(REPO, max_round=_as_of_round())
-    order = stats["stale_order_names"]
-    flags = order[200:203]
-    fill = [n for n in order if n not in set(flags)][:47]
-    assert mod.window_flag_split(flags + fill, order) == 3
-
-
-def test_short_window_cannot_validate_vacuously():
-    # r14 review: without the non-empty-fill requirement, ANY window of
-    # length <= MAX_FLAG_BLOCK validated — k = len(window) made both
-    # sides of the tail comparison empty.  A garbage 25-name window must
-    # be rejected; a legitimate short window (flags + a real stale fill)
-    # must still pass.
-    mod = _mod()
-    stats = mod.audit(REPO, max_round=_as_of_round())
-    order = stats["stale_order_names"]
-    garbage = [n for n in reversed(order)][:25]  # 25 freshest names
-    assert mod.window_flag_split(garbage, order) is None
-    short_valid = order[200:203] + [n for n in order if n not in order[200:203]][:10]
-    assert mod.window_flag_split(short_valid, order) == 3
+    # The order the driver is served and the audit's stale order are
+    # one policy: the window is the head of the stale order.
+    stats = _mod().audit(REPO)
+    assert list(registry.all_specs())[:50] == stats["stale_order_names"][:50]
 
 
 def test_every_registered_query_has_green_evidence():
     # Companion gate to the staleness SLO (r14 review): stale_names
     # exempts names with no last-green round, which is correct for
-    # never-CHECKED names (the composition gate forces them to the
-    # front) but would also hide a never-GREEN name — checked, red on
+    # never-CHECKED names (the computed order puts them at the front)
+    # but would also hide a never-GREEN name — checked, red on
     # every attempt — forever.  Never-green is a DEFECT and gets its own
     # unbounded assertion, so the exemption cannot be ridden.
     stats = _mod().audit(REPO)  # unbounded: about the present ledger
@@ -204,11 +130,11 @@ def test_registered_never_green_is_a_true_intersection(tmp_path):
     # UNREGISTERED name keeps the counts equal, but the set names the
     # defect.
     mod = _mod()
-    rounds = mod._round_artifacts(REPO)
+    rounds = registry.round_artifacts()
     registered = set(registry.all_specs())
     earliest = json.loads(rounds[0][1].read_text())
     victim = next(
-        n for n, row in earliest.items() if n in registered and mod._is_green(row)
+        n for n, row in earliest.items() if n in registered and registry.is_green(row)
     )
     # enough green unregistered ghosts to keep ever_green == registered:
     # one replacing the victim, plus one per registered-but-never-checked
@@ -236,21 +162,17 @@ def test_registered_never_green_is_a_true_intersection(tmp_path):
 
 
 def test_endangered_names_are_in_current_window():
-    # Reconciles the SLO bound (derived from full-window rotation) with
-    # the sanctioned flag block (r14 review): any name that would exceed
-    # the staleness bound once the NEXT artifact lands must be in THIS
-    # window, so a flag block large enough to starve the rotation
-    # reddens at composition time instead of tripping the SLO rounds
-    # later with every intervening window "valid".
+    # Any name that would exceed the staleness bound once the NEXT
+    # artifact lands must be in THIS window; more than 50 endangered
+    # names at once means the bound no longer matches the registry size.
     mod = _mod()
     stats = mod.audit(REPO)  # unbounded: the next artifact lands on top
     endangered = mod.endangered_names(stats, registry.MAX_EVIDENCE_AGE_ROUNDS)
-    window = set(registry._WINDOW_PRIORITY)
+    window = set(list(registry.all_specs())[:50])
     missing = [n for n in endangered if n not in window]
     assert missing == [], (
         f"{len(missing)} names will violate the freshness SLO next round "
-        f"but are not in _WINDOW_PRIORITY: {missing[:10]} — the flag "
-        "block crowded out the stalest names; split the re-window"
+        f"but are not in the first 50 of registry.all_specs(): {missing[:10]}"
     )
 
 
@@ -262,8 +184,7 @@ def test_endangered_names_flags_crowded_out_slo_names():
     stats = mod.audit(REPO)
     newest = max(stats["rounds"])
     # the stalest name WITH evidence — never-checked names sort first in
-    # stale order but have no last-green round and are handled by the
-    # window-composition gate, not the SLO
+    # stale order but have no last-green round, so the SLO skips them
     oldest_name = next(
         n for n in stats["stale_order_names"] if n in stats["last_green_round"]
     )
@@ -278,35 +199,27 @@ def test_endangered_names_flags_crowded_out_slo_names():
 def test_rotation_basis_is_import_order_independent():
     """r18 regression: the stale-order tie-break is CANONICAL
     registration order (registry.registration_order), not _REGISTRY
-    insertion order.  A pytest session that imports curation (whose
-    transitive imports register the llm block before analytics) before
-    _load_all used to flip the round-10 tie cohort and falsely redden
-    the window-composition gate.  Pin both halves: (a) a subprocess
-    that imports curation FIRST still computes split == 0 against the
-    committed window; (b) canonical order is invariant under _REGISTRY
-    dict order by construction (key = module rank + in-module seq)."""
+    insertion order.  A process that imports curation (whose transitive
+    imports register the llm block before analytics) before _load_all
+    must still be served exactly the order a clean process computes."""
     import subprocess
     import sys
 
-    code = (
-        "import sys, pathlib; sys.path.insert(0, %r);"
-        "import discogs_etl_spark.curation;"  # pollute import order first
-        "from discogs_etl_spark import registry;"
-        "import importlib.util;"
-        "spec = importlib.util.spec_from_file_location('ea', %r);"
-        "mod = importlib.util.module_from_spec(spec); spec.loader.exec_module(mod);"
-        "stats = mod.audit(pathlib.Path(%r), max_round=%d);"
-        "k = mod.window_flag_split(registry._WINDOW_PRIORITY, stats['stale_order_names']);"
-        "assert k is not None, 'window split reddened under polluted import order';"
-        "co = registry.registration_order();"
-        "assert sorted(co) == sorted(registry._REGISTRY), 'registration_order lost names';"
-        "print('ok', k)"
-    ) % (str(REPO), str(REPO / "scripts" / "evidence_audit.py"), str(REPO), _as_of_round())
-    out = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True, timeout=600
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    assert out.stdout.startswith("ok"), out.stdout
+    def served(pre_import: str) -> str:
+        code = (
+            f"import sys; sys.path.insert(0, {str(REPO)!r});{pre_import}"
+            "from discogs_etl_spark import registry;"
+            "print('\\n'.join(registry.all_specs()))"
+        )
+        out = subprocess.run(
+            [sys.executable, "-c", code], capture_output=True, text=True, timeout=600
+        )
+        assert out.returncode == 0, out.stderr[-2000:]
+        return out.stdout
+
+    clean = served("")
+    assert clean.split() == list(registry.all_specs())
+    assert served("import discogs_etl_spark.curation;") == clean
 
 
 def test_every_product_module_has_a_canonical_rank():

@@ -172,7 +172,7 @@ def q_three(spark, sf):
 '''
 
 REGISTRY_MOD = '''
-_WINDOW_PRIORITY = ("a", "b")
+_ORDER_STATE = ("a", "b")
 
 def register(name):
     def deco(fn):
@@ -214,9 +214,9 @@ def test_function_scoped_import_propagates_dirtiness():
 
 
 def test_registry_window_rotation_does_not_flag_queries():
-    # The window tuple changes EVERY round; query modules import only
-    # `register` from registry.py, so rotating the tuple must not dirty
-    # any builder (else every round would re-window everything).
+    # Query modules import only `register` from registry.py, so editing
+    # registry state `register` does not reach (the evidence-window
+    # ordering) must not dirty any builder.
     mod = _mod()
     rotated = REGISTRY_MOD.replace('("a", "b")', '("c", "d")')
     a = _analysis(mod, HELPER_MOD, HELPER_MOD, REGISTRY_MOD, rotated)

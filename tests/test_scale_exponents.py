@@ -276,7 +276,8 @@ def test_known_plane_ratios_in_artifact():
     # purpose to optimize for: a fixed-bucket-space equi-join over
     # embeddings (n(n-1)/2 matches from an innocent plan — the gate's
     # blind-spot class) with a fixture-pinned 8-round md5 chain per
-    # pair.  Calibrated alpha ~1.55 (min-of-5, r19); the assertion
+    # pair.  Calibrated alpha 1.70 (r19, min-of-3 per sf as
+    # time_registry records it); the assertion
     # threshold is 1.35 (= ALPHA_FLAG: the allowance test already
     # requires class "superlinear", this pins the margin story), which
     # separates the control cleanly from the largest material

@@ -193,67 +193,21 @@ def test_detect_data_type():
         detect_data_type("nothing.xml")
 
 
-def test_native_xml_source_matches_kernel(spark, tmp_path):
-    """Fast path (built-in XML source) agrees with the fidelity kernel on
-    CLEAN input — schema and values (SURVEY §2.1 S1 both options).  The
-    dirty constructs (invalid chars, newline collapse) are exactly what
-    the fast path does NOT handle — that's the kernel's job."""
-    import gzip
-
-    from discogs_etl_spark.sources.xml_native import ingest_release_native
-
-    clean = RELEASE_XML.replace(b"\x07", b" ").replace(
-        b"line one\nline two", b"line one line two"
-    )
-    dump = tmp_path / "discogs_20190301_releases.xml.gz"
-    dump.write_bytes(gzip.compress(clean))
-
-    native = ingest_release_native(spark, str(dump))
-    kernel = ingest_xml_bytes(spark, clean, "release")
-    # names/types must agree exactly; the native path's nullability flags
-    # are STRICTER (coalesce-defaulted columns are provably non-null),
-    # which is compatible — nullability is advisory metadata in Spark
-    assert [(f.name, f.dataType) for f in native.schema.fields] == [
-        (f.name, f.dataType) for f in kernel.schema.fields
-    ]
-    n = {r["id"]: r.asDict(recursive=True) for r in native.collect()}
-    k = {r["id"]: r.asDict(recursive=True) for r in kernel.collect()}
-    assert n == k
+FIXTURES = {"release": RELEASE_XML, "master": MASTER_XML, "label": LABEL_XML, "artist": ARTIST_XML}
 
 
-@pytest.mark.parametrize(
-    "data_type,xml",
-    [
-        ("artist", None),  # filled in the body from module fixtures
-        ("master", None),
-        ("label", None),
-    ],
-)
-def test_native_paths_all_entities(spark, tmp_path, data_type, xml):
-    """Every entity's native fast path agrees with the fidelity kernel on
-    clean input (embed bool parse, image field order, nested artist
-    structs, sublabel text lists)."""
-    import gzip
+@pytest.mark.parametrize("data_type", sorted(FIXTURES))
+def test_file_ingest_matches_bytes_kernel(spark, tmp_path, data_type):
+    """The backfill's path — a gzipped dump file stream-parsed in chunks on
+    an executor — yields exactly the rows of the whole-document kernel on
+    every entity's dirty fixture."""
+    raw = FIXTURES[data_type]
+    dump = tmp_path / f"discogs_20190301_{data_type}s.xml.gz"
+    dump.write_bytes(gzip.compress(raw))
 
-    from discogs_etl_spark.sources.xml_native import NATIVE_INGESTORS
-
-    fixtures = {"artist": ARTIST_XML, "master": MASTER_XML, "label": LABEL_XML}
-    raw = fixtures[data_type]
-    # strip the deliberately-dirty constructs; native path is clean-only
-    clean = (
-        raw.replace(b"<documents>", b"").replace(b"</documents>", b"")
-        .replace(b"\x07", b" ")
-        .replace(b"a@b.c\nsecond line", b"a@b.c second line")
-    )
-    plural = {"artist": "artists", "master": "masters", "label": "labels"}[data_type]
-    dump = tmp_path / f"discogs_20190301_{plural}.xml.gz"
-    dump.write_bytes(gzip.compress(clean))
-
-    native = NATIVE_INGESTORS[data_type](spark, str(dump))
-    kernel = ingest_xml_bytes(spark, clean, data_type)
-    assert [(f.name, f.dataType) for f in native.schema.fields] == [
-        (f.name, f.dataType) for f in kernel.schema.fields
-    ]
-    n = {r["id"]: r.asDict(recursive=True) for r in native.collect()}
-    k = {r["id"]: r.asDict(recursive=True) for r in kernel.collect()}
-    assert n == k
+    via_file = ingest_xml(spark, str(dump))
+    via_bytes = ingest_xml_bytes(spark, raw, data_type)
+    assert via_file.schema == via_bytes.schema
+    f = sorted((r.asDict(recursive=True) for r in via_file.collect()), key=lambda d: d["id"])
+    b = sorted((r.asDict(recursive=True) for r in via_bytes.collect()), key=lambda d: d["id"])
+    assert f == b
