@@ -105,332 +105,8 @@ _tc_spec.loader.exec_module(_tc)
 # acknowledgeable — that is artifact integrity, not a plan change.
 # "It was green" is not a rationale; cite the commit that changed the
 # plan.
-# Shared rationale fragment for the round-18 optimization rewrites —
-# every entry below cites it plus the query-specific delta.  The round's
-# full measurement evidence (before/after bench seconds, plan dumps,
-# exact-oracle re-verification at sf0.001/0.01/0.1) is in
-# OPTIMIZATION_r18.md and plans/r18/.
-_R18_OPT = (
-    "r18 OPTIMIZATION round rewrite (OPTIMIZATION_r18.md): plan "
-    "restructured for performance with values PROVEN unchanged — "
-    "exact-oracle match re-verified at all three fixture sfs. "
-)
 
 ADJUDICATED: dict[int, dict[tuple[str, str], str]] = {
-    18: {
-        ("events_littles_law_report", "cross_composition"): (
-            _R18_OPT
-            + "The sessionization bounds this query derives from are now "
-            "materialized once (sessions_max_concurrency's r18 "
-            "localCheckpoint), so the scalar cross's build subtree reads "
-            "the checkpoint RDD instead of re-deriving the events scan — "
-            "same 1-row broadcast attach, sources parquet→rdd."
-        ),
-        ("kmeans_embeddings_fixed", "cross_composition"): (
-            _R18_OPT
-            + "Lloyd assignment is now a MAP-ONLY broadcast-centroid-array "
-            "argmin: the k-row centroid cross became a 1-row "
-            "collect_list(struct(cid, cv)) cross, deleting the per-round "
-            "corpus×k window shuffle (window/sort/filter nodes gone from "
-            "every cross build subtree).  2.354 → 1.714 s benched."
-        ),
-        **{
-            ("kmeans_embeddings_fixed", kind): (
-                _R18_OPT
-                + "Same map-only argmin rewrite: the per-__id row_number "
-                "window and its __rn=1 filter no longer exist; the new "
-                "captures are the 1-row centroid collect_list aggregate "
-                "and the array_min(transform(...)) argmin projections."
-            )
-            for kind in ("pinned_cond", "pinned_agg", "pinned_window", "pinned_proj")
-        },
-        **{
-            ("lm_bigram_surprisal", kind): (
-                _R18_OPT
-                + "The bigram-instance pass now runs ONCE (checkpointed "
-                "per-doc counts; the LM derives from them — bigram's "
-                "prefix recovers w1) and the context totals come from a "
-                "w1-window instead of a second aggregation + join: the "
-                "(w1, bigram) aggregates, the w1 join and the 3 documents "
-                "scans left the plan.  2.131 → 1.328 s benched."
-            )
-            for kind in ("pinned_cond", "pinned_agg", "pinned_window", "pinned_proj")
-        },
-        **{
-            ("sessions_max_concurrency", kind): (
-                _R18_OPT
-                + "Session bounds are materialized once (localCheckpoint) "
-                "so the sessionization windows and the events scan run 1x "
-                "instead of 3x; the sweep/carry branches now read the "
-                "checkpoint and the window/agg captures moved inside the "
-                "checkpoint build.  1.075 → 0.805 s benched."
-            )
-            for kind in ("pinned_agg", "pinned_window", "pinned_proj")
-        },
-        **{
-            ("feature_hashing_vectorize", kind): (
-                _R18_OPT
-                + "The (doc, term) pre-count aggregation and its exchange "
-                "are gone: Σ±cnt over term groups equals Σ±1 over raw "
-                "token instances, so ONE (doc, idx) aggregation partial-"
-                "aggregates straight off the explode (md5 staged behind a "
-                "projection, evaluated once per instance)."
-            )
-            for kind in ("pinned_agg", "pinned_proj")
-        },
-        **{
-            ("graph_pagerank_coorder", kind): (
-                _R18_OPT
-                + "The eager edge materialization was dropped (the union "
-                "over the memoized oriented checkpoint is narrow) and the "
-                "node-sized degree table is checkpointed instead, making "
-                "the node count metadata-cheap; the degree aggregate "
-                "moved inside the checkpoint build and the src "
-                "repartition sort surfaces.  2.958 → 2.387 s benched."
-            )
-            for kind in ("pinned_agg", "pinned_window")
-        },
-        **{
-            (n, "pinned_proj"): (
-                _R18_OPT
-                + "BM25 scoring now accumulates int64 micros instead of a "
-                "DECIMAL(28,6) buffer (bm25_contribution_micros — the "
-                "_util.fixed idiom; A/B-verified bit-equal over every "
-                "contribution at all three sfs): the captured scoring "
-                "projection carries round(raw·1e6) AS BIGINT and the "
-                "finalizer divides the summed micros back to the double "
-                "score.  Scoring aggregate measured 4.39 → 2.85 s."
-            )
-            for n in (
-                "text_search_bm25_topk",
-                "text_search_bm25_pruned_topk",
-                "curation_search_corpus",
-            )
-        },
-        ("dedup_embedding_cosine", "cond_text"): (
-            _R18_OPT
-            + "Batch-3 per-pair tuning (commit: cosine-family unroll): the "
-            "pair predicate's 3 interpreted aggregate-fold dot products "
-            "became ONE unrolled left-associated Add chain over hoisted "
-            "per-vector norms (na*nb), and the cheap vec_a<vec_b conjunct "
-            "now leads so the dot short-circuits for the mirrored half. "
-            "Same 0.0 seed, same per-element products, same in-order "
-            "accumulation → bit-identical doubles (A/B 0 divergences over "
-            "every pair at sf0.1).  83.7 → ~9 s isolated."
-        ),
-        ("dedup_embedding_cosine", "cond_composition"): (
-            _R18_OPT
-            + "Same rewrite: each BNLJ input gained one Project computing "
-            "the hoisted sqrt-dot norm per vector (ProjectExec 2→4 in the "
-            "build subtree); sources and join node unchanged."
-        ),
-        **{
-            ("dedup_embedding_bucketed", kind): (
-                _R18_OPT
-                + "Norms hoisted to one sqrt-dot per VECTOR (new na/nb "
-                "projections below the bucket join) and the residual "
-                "condition reordered cheap-conjunct-first with the dot "
-                "over na*nb — bit-identical cosine doubles; the dot "
-                "stays the fold (within-bucket pair count too small to "
-                "amortize an unrolled chain's compile cost)."
-            )
-            for kind in ("pinned_cond", "pinned_proj")
-        },
-        **{
-            ("dedup_semdedup", kind): (
-                _R18_OPT
-                + "Batch-3 per-pair tuning: norm hoisted to one unrolled "
-                "sqrt-dot per vector on the corpus-sized v (before both "
-                "pair sides), unrolled in-order dot over nra*nrb in the "
-                "within-cluster residual, cheap conjuncts first — "
-                "bit-identical cosine doubles (oracle-exact at all three "
-                "sfs).  12.2 → 7.0 s isolated."
-            )
-            for kind in ("pinned_cond", "pinned_proj")
-        },
-        **{
-            ("dedup_doc_duplication_score", kind): (
-                _R18_OPT
-                + "Batch-2 rewrite (landed in commit 3c9fb3f; sweep "
-                "artifact lagged it — this entry closes the lag): the "
-                "corpus-sized 48-char window stream is generated ONCE, "
-                "(w, doc_id) aggregation compacts windows to per-doc "
-                "multiplicities map-side, a w-partitioned count window "
-                "marks nd≥2 on the same shuffle layout, and the per-doc "
-                "rollup sums multiplicities — the duplicate-set branch, "
-                "its membership join and the second explode left the "
-                "plan.  Σk integers identical; oracle-exact at both "
-                "verification sfs.  7.56 → 6.05 s isolated."
-            )
-            for kind in (
-                "pinned_cond",
-                "pinned_agg",
-                "pinned_window",
-                "pinned_proj",
-            )
-        },
-        **{
-            ("pricing_consistency_audit", kind): (
-                _R18_OPT
-                + "Batch-2 rewrite (landed in commit 3c9fb3f; sweep "
-                "artifact lagged it — this entry closes the lag): the "
-                "three scalar percentile(ratio, q) aggregates became ONE "
-                "percentile(ratio, array(0.5, 0.01, 0.99)) buffer and a "
-                "finalizing projection reads the three quantiles from "
-                "the array — identical interpolation, identical doubles "
-                "(values equal: True).  12.38 → 2.96 s isolated."
-            )
-            for kind in ("pinned_agg", "pinned_proj")
-        },
-        ("stats_theil_sen_trend", "cond_composition"): (
-            _R18_OPT
-            + "Batch-5: `daily` is localCheckpoint-ed, so both pair-join "
-            "sides of the (b.d > a.d) BNLJ read the checkpoint RDD "
-            "instead of re-deriving the orders aggregation (sources "
-            "parquet→rdd; the .count() action stopped re-running the "
-            "aggregation too).  13.8 → ~4 s isolated."
-        ),
-        **{
-            ("stats_theil_sen_trend", kind): (
-                _R18_OPT
-                + "Batch-5: the median is now sort+rank — a global-order "
-                "row_number/count window and a min(CASE WHEN rk = "
-                "floor/ceil(pos)+1) aggregate reproducing "
-                "Percentile.getPercentile's interpolation VERBATIM "
-                "(A/B bit-equal at all three sfs) — because the exact "
-                "percentile buffer hashed ~2.9M mostly-unique doubles "
-                "per partial (10-16 s of the query's 13.8 s).  The "
-                "checkpoint also moved the datediff grouping captures "
-                "inside the checkpoint build."
-            )
-            for kind in ("pinned_cond", "pinned_agg", "pinned_window", "pinned_proj")
-        },
-        **{
-            ("fuzzy_join_levenshtein_blocked", kind): (
-                _R18_OPT
-                + "Batch-5: 3-arg banded levenshtein(a, b, 5) — computes "
-                "only the |i−j| ≤ 5 diagonal band (O(k·n) per candidate "
-                "pair instead of O(n²)) and returns the EXACT distance "
-                "within the threshold, so every emitted pair and "
-                "lev_dist is unchanged (A/B equal at sf0.01 + sf0.1); "
-                "the ≤5 filter became lev >= 0 in the join residual.  "
-                "7.5 → 0.8 s isolated."
-            )
-            for kind in ("pinned_cond", "pinned_proj")
-        },
-        **{
-            ("backfill_audit_table", kind): (
-                "ENTERED all four pinned expression-capture tiers by "
-                "design (commit b4cb4a2, the r17-end mid-build commit "
-                "that registered the query and pinned its API_SURFACE "
-                "plan shape): the backfill CLI verb's audit composition "
-                "is a driver-local results scan, and pinning its "
-                "expressions makes a distributed join appearing in that "
-                "plan redden the gate.  A NEW pin has no prev capture "
-                "by definition — the r17 API_SURFACE precedent."
-            )
-            for kind in ("pinned_cond", "pinned_agg", "pinned_window", "pinned_proj")
-        },
-    },
-    17: {
-        ("curation_dedup_corpus", "cross_count"): (
-            "query REGISTERED this round (commit f6b1059), so its prev "
-            "count is vacuously 0: the one condition-less cross is the "
-            "deliberate F.broadcast(report) one-row report attach — the "
-            "same audited shape as r16's curation_dedup_media"
-        ),
-        ("curation_search_corpus", "cross_count"): (
-            "query REGISTERED this round, so its prev count is vacuously "
-            "0: the one condition-less cross is search_corpus's "
-            "deliberate F.broadcast(stats) 1-row corpus-stats attach "
-            "(curation.py) — the same audited shape as the registered "
-            "BM25 queries that share bm25_contribution"
-        ),
-        ("curation_dedup_media_capped", "cross_count"): (
-            "query REGISTERED this round (commit c1bab7f), so its prev "
-            "count is vacuously 0: the one condition-less cross is the "
-            "deliberate F.broadcast(report) one-row report attach — the "
-            "same audited shape as r16's curation_dedup_media"
-        ),
-        ("dedup_minhash_capped_pairs", "pinned_cond"): (
-            "ENTERED the pinned expression-capture set by design (commit "
-            "3f1fe78, VERDICT r16 task #7): the LSH skew guards' width "
-            "filter joins are now plan-pinned so a dropped filter reddens "
-            "the plan gate — a NEW pin has no prev capture by definition"
-        ),
-        ("multimodal_phash_capped_pairs", "pinned_cond"): (
-            "ENTERED the pinned expression-capture set by design (commit "
-            "3f1fe78, VERDICT r16 task #7): same rationale as its MinHash "
-            "twin — the n_hashes <= 16 width filter is now captured"
-        ),
-        **{
-            (n, "pinned_cond"): (
-                "ENTERED the pinned expression-capture set by design "
-                "(r17 API_SURFACE tier): the user-facing curation API "
-                "compositions are now plan-pinned end-to-end — their "
-                "stages were already pinned, but a regression in the "
-                "composition glue (a lost report broadcast, a "
-                "re-shuffled survivor join, a dropped width filter at "
-                "the API call site) was invisible to the stage pins.  "
-                "A NEW pin has no prev capture by definition."
-            )
-            for n in (
-                "curation_dedup_corpus",
-                "curation_dedup_media",
-                "curation_dedup_media_capped",
-                "curation_search_corpus",
-                "curation_profile_table",
-            )
-        },
-    },
-    16: {
-        ("curation_dedup_media", "cross_count"): (
-            "query REGISTERED this round (commit c007730), so its prev "
-            "count is vacuously 0: the one condition-less cross is the "
-            "deliberate F.broadcast(report) one-row report attach — a "
-            "hinted broadcast nested loop over exactly one row, present "
-            "in the sweep's _allowed snapshot and audited"
-        ),
-        **{
-            (n, "pinned_cond"): (
-                "capture FORMAT change, not a plan change: condition_texts "
-                "records hash-join keys as jointly-sorted left=right pairs "
-                "since commit 2d88b86 (r15 ADVICE #2 — independent key-list "
-                "sorting missed re-paired join keys).  Verified mechanical "
-                "before adjudicating: every r16 pinned text projected back "
-                "to the r15 format compares byte-exact against "
-                "PLANSWEEP_r15 across all 41 pinned names (16 identical, "
-                "these 25 format-only, zero real diffs)."
-            )
-            for n in (
-            "dedup_connected_components",
-            "dedup_doc_duplication_score",
-            "dedup_embedding_bucketed",
-            "dedup_minhash_eval",
-            "dedup_minhash_lsh",
-            "dedup_semdedup",
-            "embedding_power_iteration_pc1",
-            "embedding_power_iteration_pc1_gram",
-            "fuzzy_join_levenshtein_blocked",
-            "graph_pagerank_coorder",
-            "graph_triangle_count",
-            "join_broadcast_part_agg",
-            "join_skew_salted",
-            "lm_bigram_surprisal",
-            "multimodal_phash_dedup",
-            "pricing_consistency_audit",
-            "q3_shipping_priority",
-            "q5_regional_revenue",
-            "range_join_bucketed",
-            "recsys_holdout_hitrate",
-            "sessions_max_concurrency",
-            "similarity_ivf_topk",
-            "text_search_bm25_pruned_topk",
-            "text_search_bm25_topk",
-                "text_search_inverted_topk",
-            )
-        },
-    },
     19: {
         # TWO adjudicated rewrites share these (name, kind) slots this
         # round, both in the exact set-similarity family

@@ -1,51 +1,47 @@
-"""Decide which registered queries must be re-windowed, mechanically.
+"""Per-query code-closure fingerprints: did a registered query's code change?
 
-The evidence-rotation rule through round 6 was textual: ANY edit to a
-module containing registered queries re-windowed every query in it, so
-an import hoist or comment fix burned driver-evidence slots (verdict r6
-nit #2 counted two such slots).  This script tightens the rule to
-EXECUTABLE granularity while keeping it mechanical:
+A query's fingerprint is a 16-hex sha256 over the docstring-stripped AST
+dumps of every top-level binding its builder function can reach:
 
-    a registered query must be re-windowed iff, since the given base
-    rev, a DIRTY name is reachable from its builder function by
-    name-occurrence within its module (transitively).  A name is dirty
-    when (a) a statement binding OR mutating it changed (docstring-
-    stripped AST), (b) it is imported (``from m import name``) and
-    ``name``'s reachable closure in the repo-local module ``m`` touches
-    a dirty name there (or ``name`` is itself a repo-local submodule
-    with any dirty name), or (c) it aliases a repo-local module
-    (``import m``) that has ANY dirty name.
+* within a module, by name occurrence, transitively (a name mentioned
+  under a dead branch still counts — the closure over-approximates);
+* ``from m import name`` pulls ``name``'s closure in the repo-local
+  module ``m`` (or all of ``m`` when ``name`` is itself a submodule);
+* ``import m`` and ``from m import *`` pull all of ``m``;
+* a top-level statement the index cannot attribute to a name (see
+  UNMODELED) pulls its whole module;
+* import cycles truncate to the re-entered module's own bindings.
 
-Comments never reach the AST; docstrings are stripped before comparing;
-import statements are keyed by the names they bind, so hoisting or
-reordering them changes nothing.  Bindings inside top-level if/try/
-while/for/with accumulate (a name bound in several branches depends on
-all of them), and module-level mutations — ``X[k] = v``, ``X += 1``,
-``X.update(...)`` — accumulate onto the mutated name, so none of those
-edits can hide.  Name-occurrence reachability is an over-approximation
-(a name mentioned under a dead branch still counts), and cross-module
-dirtiness propagates through the repo-local import graph — including
-imports written inside function bodies — so within its stated
-assumptions the rule over-re-windows, never under.  The assumptions,
-stated: builders resolve their dependencies by ordinary imports and
-module-level names — no importlib/``globals()``/``exec`` dynamic
-dispatch, no behavior smuggled in via non-Python data files — which
-holds for every module in this package.  Shared-helper changes are
-therefore LOUD by design: editing anything ``tables.load`` reaches
-dirties the ``load`` alias in every query module that imports it and
-flags every builder that mentions it — correct, because all of their
-results could change.
+Imports written inside function bodies count like module-level ones.
+Comments never reach the AST, docstrings are stripped, and imports are
+keyed by the names they bind, so comment edits, docstring edits and
+import hoists leave every fingerprint unchanged.  Bindings inside
+top-level if/try/while/for/with accumulate (a name bound in several
+branches depends on all of them), and module-level mutations —
+``X[k] = v``, ``X += 1``, ``X.update(...)`` — accumulate onto the
+mutated name, so none of those edits can hide.  The stated assumptions:
+builders resolve their dependencies by ordinary imports and module-level
+names — no importlib/``globals()``/``exec`` dynamic dispatch, no
+behavior smuggled in via non-Python data files — which holds for every
+module in this package.  Shared-helper changes are therefore LOUD by
+design: editing anything ``tables.load`` reaches changes the fingerprint
+of every builder that mentions ``load``.
 
-Usage::
+``current_fingerprints()`` stamps the working tree; time_registry.py
+records it in every sweep and scale_exponents.py ties
+SCALE_EXPONENTS.json rows to it.  The CLI fingerprints the package as
+of a git revision (with the current registry's builder locations) and
+prints every registered query whose fingerprint differs from the
+working tree's::
 
-    python scripts/rewindow_check.py <base-rev>          # names to re-window
-    python scripts/rewindow_check.py <base-rev> --why    # + which names are dirty
+    python scripts/rewindow_check.py <rev>
 """
 
 from __future__ import annotations
 
 import argparse
 import ast
+import hashlib
 import subprocess
 import sys
 from pathlib import Path
@@ -57,10 +53,10 @@ PACKAGE = "discogs_etl_spark"
 # (bare side-effect calls like ``setup()``, ``del X``, module-level
 # ``match``/``assert``/``raise``, and compounds containing such
 # statements).  Such a statement could mutate anything in its module,
-# so a change to one dirties the whole module: the sentinel joins every
-# builder's flagged set and propagates through member imports.  The
-# package currently carries UNMODELED statements in exactly TWO
-# modules, neither imported by any query module: __main__.py (the
+# so its whole module joins the fingerprint of every builder that
+# lives in or member-imports from that module.  The package currently
+# carries UNMODELED statements in exactly TWO modules, neither
+# imported by any query module: __main__.py (the
 # ``raise SystemExit(main())`` entry) and cli.py (the ``__main__``
 # guard's bare ``main()`` call) — pinned by
 # tests/test_rewindow_check.py::test_package_unmodeled_inventory, which
@@ -230,8 +226,8 @@ class ModuleIndex:
     bare name OVERWRITES (last binding wins, like the interpreter),
     while branch bindings (if/try/...), augmented assignments, and
     subscript/attribute/method-call mutations ACCUMULATE onto the name —
-    a change to ANY statement that could have produced the value flags
-    it.
+    a change to ANY statement that could have produced the value changes
+    the name's dumps.
     """
 
     def __init__(self, src: str, relpath: str) -> None:
@@ -248,7 +244,7 @@ class ModuleIndex:
         self.star_imports: set[str] = set()
         self._walk_body(tree.body)
         # Imports inside function/compound bodies bind locally, but for
-        # dirtiness they matter module-wide: record them all.
+        # the code closure they matter module-wide: record them all.
         for node in ast.walk(tree):
             if isinstance(node, (ast.Import, ast.ImportFrom)):
                 self._record_import(node, bind=False)
@@ -261,7 +257,7 @@ class ModuleIndex:
             # accumulated: statement MULTIPLICITY is part of behavior
             # (deleting one of two identical ``X.append(1)`` statements
             # changes how many times it executes), so deduping here
-            # would under-flag — the one direction the rule forbids.
+            # would hide a change — the one direction the rule forbids.
             self.defs[name] = self.defs[name] + (dump,)
             self.uses[name] |= names
         else:
@@ -422,110 +418,6 @@ def _module_to_relpath(dotted: str, known: set[str]) -> str | None:
     return None
 
 
-class RewindowAnalysis:
-    """Testable core: takes {relpath: (cur_src, base_src|None)} directly."""
-
-    def __init__(self, sources: dict[str, tuple[str, str | None]]) -> None:
-        self.sources = sources
-        self.cur: dict[str, ModuleIndex] = {
-            rel: ModuleIndex(cur, rel) for rel, (cur, _) in sources.items()
-        }
-        self._changed_memo: dict[str, set[str]] = {}
-        self._dirty_memo: dict[str, set[str]] = {}
-
-    def changed_defs(self, rel: str) -> set[str]:
-        if rel in self._changed_memo:
-            return self._changed_memo[rel]
-        cur = self.cur[rel].defs
-        base_src = self.sources[rel][1]
-        if base_src is None:
-            out = set(cur)  # new module: everything counts as changed
-        else:
-            base = ModuleIndex(base_src, rel).defs
-            out = {n for n in set(cur) | set(base) if cur.get(n) != base.get(n)}
-        self._changed_memo[rel] = out
-        return out
-
-    def dirty_names(self, rel: str, _visiting: frozenset = frozenset()) -> set[str]:
-        """Names in ``rel`` whose behavior may have changed: own AST diff
-        plus dirtiness imported from other repo-local modules."""
-        if rel in self._dirty_memo:
-            return self._dirty_memo[rel]
-        if rel in _visiting:
-            return self.changed_defs(rel)  # import cycle: own changes only
-        visiting = _visiting | {rel}
-        dirty = set(self.changed_defs(rel))
-        idx = self.cur[rel]
-        known = set(self.sources)
-        for local, specs in idx.imports.items():
-            for spec in specs:
-                if spec[0] == "module":
-                    target = _module_to_relpath(spec[1], known)
-                    if target and target != rel and self.dirty_names(target, visiting):
-                        dirty.add(local)
-                else:
-                    mod, member = spec[1], spec[2]
-                    # 'from pkg import submodule': the member may itself be
-                    # a repo-local MODULE — any change inside it counts
-                    sub_rel = _module_to_relpath(f"{mod}.{member}", known)
-                    if sub_rel and sub_rel != rel and self.dirty_names(sub_rel, visiting):
-                        dirty.add(local)
-                        continue
-                    target = _module_to_relpath(mod, known)
-                    if target and target != rel and self._name_dirty(
-                        target, member, visiting
-                    ):
-                        dirty.add(local)
-        for smod in idx.star_imports:
-            target = _module_to_relpath(smod, known)
-            if target and target != rel:
-                dirty |= self.dirty_names(target, visiting)
-        # An UNMODELED statement whose own dump is unchanged still
-        # changes module behavior when anything it CALLS/MENTIONS is
-        # dirty (`setup()` at top level with an edited setup body runs
-        # the new code at import): the sentinel goes dirty whenever its
-        # mention closure does.
-        if (
-            UNMODELED in idx.defs
-            and UNMODELED not in dirty
-            and idx.mentioned_closure(UNMODELED) & dirty
-        ):
-            dirty.add(UNMODELED)
-        # Results computed under cycle truncation are order-dependent —
-        # memoizing them would poison later full evaluations (a real
-        # hazard: curation.py <-> queries/llm.py cycle via function-
-        # scoped imports).  Only cache top-level computations.
-        if not _visiting:
-            self._dirty_memo[rel] = dirty
-        return dirty
-
-    def _name_dirty(self, rel: str, name: str, visiting: frozenset) -> bool:
-        """Is ``name`` in module ``rel`` behavior-changed?  Not just its
-        own statement: anything its closure reaches counts — 'from m
-        import load' must flag when load's INTERNAL helper changed.  A
-        changed UNMODELED statement in ``rel`` could have mutated any
-        name in it, so it dirties every member import too."""
-        dirty = self.dirty_names(rel, visiting)
-        if UNMODELED in dirty:
-            return True
-        return bool(self.cur[rel].mentioned_closure(name) & dirty)
-
-    def flagged(self, rel: str, fn_name: str) -> set[str]:
-        """Dirty names the builder can reach (empty = no re-window).
-
-        Beyond the def-closure itself, every name MENTIONED by a
-        reachable binding counts: a function-scoped ``from m import f``
-        binds no module-level def, but the builder still calls ``f``.
-        A changed UNMODELED top-level statement flags every builder in
-        the module — the index cannot bound its effect.
-        """
-        dirty = self.dirty_names(rel)
-        hit = self.cur[rel].mentioned_closure(fn_name) & dirty
-        if UNMODELED in dirty:
-            hit = hit | {UNMODELED}
-        return hit
-
-
 def _git_show(rev: str, relpath: str) -> str | None:
     proc = subprocess.run(
         ["git", "show", f"{rev}:{relpath}"],
@@ -536,57 +428,15 @@ def _git_show(rev: str, relpath: str) -> str | None:
     return proc.stdout if proc.returncode == 0 else None
 
 
-def rewindow_names(rev: str) -> dict[str, set[str]]:
-    """query name -> dirty names its builder reaches (empty = no re-window)."""
-    sys.path.insert(0, str(REPO))
-    from discogs_etl_spark import registry
-
-    # Index EVERY repo-local module, not just those holding builders:
-    # shared helpers (tables.py, queries/_util.py, ...) propagate
-    # dirtiness into query modules through the import graph.
-    sources: dict[str, tuple[str, str | None]] = {}
-    for f in sorted((REPO / PACKAGE).rglob("*.py")):
-        rel = str(f.relative_to(REPO))
-        sources[rel] = (f.read_text(), _git_show(rev, rel))
-    analysis = RewindowAnalysis(sources)
-
-    out: dict[str, set[str]] = {}
-    for name, spec in registry.all_specs().items():
-        mod = sys.modules[spec.fn.__module__]
-        rel = str(Path(mod.__file__).resolve().relative_to(REPO))
-        fn_name = spec.fn.__qualname__.split(".")[0].split("<locals>")[0]
-        hit = analysis.flagged(rel, fn_name)
-        if hit:
-            out[name] = hit
-    return out
-
-
-# --- Code-closure fingerprints (r14) -------------------------------
-#
-# The scaling-exponent artifact (SCALE_EXPONENTS.json) is keyed to
-# query CODE, not rounds: a rewrite that introduces an accidental
-# quadratic must redden the suite until the affected names are
-# re-measured.  These helpers hash each builder's reachable code
-# closure in the CURRENT tree, mirroring the dirtiness-propagation
-# rules above (own-module mention closure; member imports pull the
-# member's closure in the target module; module/star imports and
-# UNMODELED statements pull the whole target module; import cycles
-# truncate to own-module parts, like dirty_names) — so the fingerprint
-# changes exactly when this script would flag the query against the
-# fingerprinted revision, comments and docstrings excluded.
-
-
 def _fp_module_parts(idxs, known, rel, visiting, out) -> None:
     # Own defs are ALWAYS part of the identity, even on cycle re-entry:
-    # dirty_names' truncation returns changed_defs(rel) — any own-def
-    # change dirties a module-granularity alias — so a fingerprint that
-    # added nothing here would stay unchanged where rewindow flags
-    # (r14 review: module-style re-entry into a member-visited module).
+    # a module-style import re-entering a member-visited module must
+    # still see every own-def change of that module.
     idx = idxs[rel]
     for n, dumps in idx.defs.items():
         out.add((rel, n, dumps))
     if rel in visiting:
-        return  # cycle: own defs only (dirty_names rule)
+        return  # import cycle: own defs only
     visiting = visiting | {rel}
     for specs in idx.imports.values():
         for spec in specs:
@@ -625,7 +475,7 @@ def _fp_member_parts(idxs, known, rel, name, visiting, out) -> None:
         if n in idx.defs:
             out.add((rel, n, idx.defs[n]))
     if rel in visiting:
-        return  # import cycle: own-module parts only (dirty_names rule)
+        return  # import cycle: own-module parts only
     visiting = visiting | {rel}
     for n in sorted(closure):
         for spec in idx.imports.get(n, ()):
@@ -636,27 +486,21 @@ def _fp_member_parts(idxs, known, rel, name, visiting, out) -> None:
             _fp_module_parts(idxs, known, t, visiting, out)
 
 
-def current_fingerprints() -> dict[str, str]:
-    """query name -> 16-hex sha256 of the builder's reachable code
-    closure in the CURRENT working tree.  Deterministic (sorted parts,
-    docstring-stripped AST dumps, repo-relative paths); stable across
-    sessions and machines for the same tree."""
-    import hashlib
-
-    sys.path.insert(0, str(REPO))
-    from discogs_etl_spark import registry
-
-    idxs: dict[str, ModuleIndex] = {}
-    for f in sorted((REPO / PACKAGE).rglob("*.py")):
-        rel = str(f.relative_to(REPO))
-        idxs[rel] = ModuleIndex(f.read_text(), rel)
+def fingerprints(
+    sources: dict[str, str], builders: dict[str, tuple[str, str]]
+) -> dict[str, str]:
+    """query name -> 16-hex sha256 of its builder's reachable code
+    closure.  ``sources`` maps repo-relative paths to module source;
+    ``builders`` maps query names to ``(relpath, fn_name)``.  A builder
+    whose module is absent from ``sources`` gets no fingerprint.
+    Deterministic (sorted parts, docstring-stripped AST dumps,
+    repo-relative paths)."""
+    idxs = {rel: ModuleIndex(src, rel) for rel, src in sources.items()}
     known = set(idxs)
-
     out: dict[str, str] = {}
-    for name, spec in registry.all_specs().items():
-        mod = sys.modules[spec.fn.__module__]
-        rel = str(Path(mod.__file__).resolve().relative_to(REPO))
-        fn_name = spec.fn.__qualname__.split(".")[0].split("<locals>")[0]
+    for name, (rel, fn_name) in builders.items():
+        if rel not in idxs:
+            continue
         parts: set = set()
         _fp_member_parts(idxs, known, rel, fn_name, frozenset(), parts)
         blob = "\n".join(
@@ -666,17 +510,61 @@ def current_fingerprints() -> dict[str, str]:
     return out
 
 
+def builder_locations() -> dict[str, tuple[str, str]]:
+    """query name -> (relpath, builder function name), from the registry."""
+    sys.path.insert(0, str(REPO))
+    from discogs_etl_spark import registry
+
+    out: dict[str, tuple[str, str]] = {}
+    for name, spec in registry.all_specs().items():
+        mod = sys.modules[spec.fn.__module__]
+        rel = str(Path(mod.__file__).resolve().relative_to(REPO))
+        out[name] = (rel, spec.fn.__qualname__.split(".")[0].split("<locals>")[0])
+    return out
+
+
+def tree_sources() -> dict[str, str]:
+    """relpath -> source for every package module in the working tree."""
+    return {
+        str(f.relative_to(REPO)): f.read_text()
+        for f in sorted((REPO / PACKAGE).rglob("*.py"))
+    }
+
+
+def current_fingerprints() -> dict[str, str]:
+    """fingerprints() of the working tree, stable across sessions and
+    machines for the same tree."""
+    return fingerprints(tree_sources(), builder_locations())
+
+
+def changed_names(rev: str) -> list[str]:
+    """Registered queries whose fingerprint at ``rev`` differs from the
+    working tree's; a builder module missing at ``rev`` counts as
+    changed."""
+    proc = subprocess.run(
+        ["git", "ls-tree", "-r", "--name-only", rev, PACKAGE],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+    )
+    if proc.returncode != 0:
+        sys.exit(proc.stderr.strip() or f"git ls-tree {rev} failed")
+    old_sources = {
+        rel: _git_show(rev, rel)
+        for rel in proc.stdout.splitlines()
+        if rel.endswith(".py")
+    }
+    builders = builder_locations()
+    cur = fingerprints(tree_sources(), builders)
+    old = fingerprints(old_sources, builders)
+    return sorted(n for n in cur if old.get(n) != cur[n])
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("base_rev", help="git rev to diff against (e.g. the last round-end commit)")
-    ap.add_argument("--why", action="store_true", help="also print which names are dirty")
-    args = ap.parse_args()
-    hits = rewindow_names(args.base_rev)
-    for qname in sorted(hits):
-        if args.why:
-            print(f"{qname}\t{','.join(sorted(hits[qname]))}")
-        else:
-            print(qname)
+    ap.add_argument("rev", help="git revision to compare the working tree against")
+    for name in changed_names(ap.parse_args().rev):
+        print(name)
 
 
 if __name__ == "__main__":

@@ -33,11 +33,12 @@ high-sf wall flags unless the name is a documented deliberate baseline
 the recall evals of their bucketed production twins).
 
 The committed artifact is MACHINE-TIED to query code: ``_meta`` carries
-a per-query code-closure fingerprint (rewindow_check's AST machinery —
-comments/docstrings excluded, import closure included), and the suite
-test recomputes fingerprints against the working tree, so a rewritten
-query reddens until its rows are re-measured.  The targeted-refresh
-path avoids re-sweeping all 369 names::
+a per-query code-closure fingerprint (rewindow_check's fingerprint
+closure rules — comments/docstrings excluded, import closure
+included), and the suite test recomputes fingerprints against the
+working tree, so a rewritten query reddens until its rows are
+re-measured.  The targeted-refresh path avoids re-sweeping all 369
+names::
 
     python scripts/time_registry.py --sf-dir /root/testdata/sf0.01 \\
         --only q1,q2 --json lo_patch.json
@@ -394,48 +395,30 @@ def current_fingerprints() -> dict[str, str]:
     return mod.current_fingerprints()
 
 
-def resolve_fingerprints(
-    names, lo: dict, hi: dict, fit_time: dict[str, str]
-) -> tuple[dict[str, str], list[str], set[str]]:
-    """(per-name fingerprint to stamp, names whose two sweeps measured
-    DIFFERENT code, bootstrap-note keys for the caller to print).
+def resolve_fingerprints(names, lo: dict, hi: dict) -> tuple[dict[str, str], list[str]]:
+    """(per-name fingerprint to stamp, names the two sweeps do not
+    certify as ONE measured implementation).
 
     The stamp must describe the code the sweeps MEASURED, not whichever
     tree later runs the fit (r14 review: an edit between sweep and fit
-    would get a fresh stamp on stale readings).  Sweeps since r14 carry
-    ``_code_fingerprints`` taken at sweep time; when both sides stamp a
-    name they must AGREE — a disagreement means the code changed
-    between the two sweeps and the row is not a measurement of any one
-    implementation (re-sweep those names).  A ONE-SIDED stamp (legacy
-    sweep paired with a new one) is accepted — it at least ties to one
-    measured tree — but reported as an unverified pairing, since an
-    edit between the two sweeps would be undetectable (r14 review: the
-    silent acceptance reproduced the chimera the mismatch check
-    exists to catch).  Fully pre-stamp sweeps fall back to fit-time
-    fingerprints, also with a note.
+    would get a fresh stamp on stale readings), so it comes only from
+    the sweeps' own ``_code_fingerprints``.  Both sides must stamp a
+    name and AGREE; a disagreement means the code changed between the
+    two sweeps, and a missing stamp leaves that possibility open.
+    Either way the name is mismatched: it gets no stamp and stays stale
+    until it is re-swept at both sfs.
     """
-    lo_fps = lo.get("_code_fingerprints")
-    hi_fps = hi.get("_code_fingerprints")
+    lo_fps = lo.get("_code_fingerprints", {})
+    hi_fps = hi.get("_code_fingerprints", {})
     out: dict[str, str] = {}
     mismatched: list[str] = []
-    notes: set[str] = set()
     for name in names:
-        a = lo_fps.get(name) if lo_fps is not None else None
-        b = hi_fps.get(name) if hi_fps is not None else None
-        if a is not None and b is not None:
-            if a == b:
-                out[name] = a
-            else:
-                mismatched.append(name)  # no stamp: stays stale until re-swept
+        a, b = lo_fps.get(name), hi_fps.get(name)
+        if a is not None and a == b:
+            out[name] = a
         else:
-            stamped = a if a is not None else b
-            if stamped is not None:
-                out[name] = stamped
-                notes.add("one-sided")
-            elif name in fit_time:
-                out[name] = fit_time[name]
-                notes.add("fit-time")
-    return out, sorted(mismatched), notes
+            mismatched.append(name)
+    return out, sorted(mismatched)
 
 
 def stale_fingerprints(artifact: dict, current: dict[str, str]) -> list[str]:
@@ -452,15 +435,14 @@ def stale_fingerprints(artifact: dict, current: dict[str, str]) -> list[str]:
 
 
 def _check_provenance(label: str, sweep: dict, sf_dir: str, rows: dict) -> None:
-    """A sweep that stamps its sf_dir/table rows must match the dir the
-    exponents are being fit against; unstamped sweeps (pre-r14) get a
-    printed bootstrap note instead of silent trust."""
+    """A sweep's stamped table rows must match the dir the exponents are
+    being fit against; an unstamped sweep cannot be paired at all."""
     if "_table_rows" not in sweep:
-        print(
-            f"note: {label} sweep carries no provenance stamp (pre-r14 "
-            f"time_registry) — pairing with {sf_dir} is unverified"
+        sys.exit(
+            f"{label} sweep carries no _table_rows provenance stamp — "
+            f"its pairing with {sf_dir} cannot be verified; re-sweep with "
+            "scripts/time_registry.py --json"
         )
-        return
     if sweep["_table_rows"] != rows:
         sys.exit(
             f"{label} sweep was taken against different data than {sf_dir} "
@@ -508,27 +490,11 @@ def main() -> int:
             )
     table = exponents(lo, hi, oracles, rows_lo, rows_hi)
 
-    fit_time = current_fingerprints()
-    fps, sweep_mismatch, fp_notes = resolve_fingerprints(
-        sorted(table), lo, hi, fit_time
-    )
-    if "fit-time" in fp_notes:
-        print(
-            "note: fingerprints fell back to the fit-time tree for "
-            "pre-stamp sweeps (r14 bootstrap) — sweeps taken since stamp "
-            "their own"
-        )
-    if "one-sided" in fp_notes:
-        print(
-            "note: some rows carry a ONE-SIDED sweep stamp (one sweep "
-            "predates code stamps) — a code change between the two "
-            "sweeps would be undetectable for them; prefer re-sweeping "
-            "both sides on stamped time_registry"
-        )
+    fps, sweep_mismatch = resolve_fingerprints(sorted(table), lo, hi)
 
     if args.patch:
         artifact = json.loads(open(args.patch).read())
-        unregistered = sorted(set(table) - set(fit_time))
+        unregistered = sorted(set(table) - set(oracles))
         if unregistered:
             sys.exit(
                 f"sweeps time names that are no longer registered: "
@@ -592,9 +558,10 @@ def main() -> int:
         print(f"wrote {args.json}")
     for n in sweep_mismatch:
         print(
-            f"SWEEP MISMATCH: {n} was measured under DIFFERENT code in the "
-            "two sweeps (sweep-time fingerprints disagree) — the row fits "
-            "no single implementation; re-sweep it at both sfs"
+            f"SWEEP MISMATCH: {n} is not stamped with ONE code fingerprint "
+            "by both sweeps (sweep-time fingerprints disagree or are "
+            "missing) — the row fits no certified implementation; "
+            "re-sweep it at both sfs"
         )
 
     for n in stale:

@@ -181,16 +181,7 @@ def main() -> int:
         res["_control_runs"] = control_runs
 
     if args.baseline:
-        import importlib.util
-
-        spec_tc = importlib.util.spec_from_file_location(
-            "timing_compare",
-            os.path.join(
-                os.path.dirname(os.path.abspath(__file__)), "timing_compare.py"
-            ),
-        )
-        tc = importlib.util.module_from_spec(spec_tc)
-        spec_tc.loader.exec_module(tc)
+        tc = _load_script("timing_compare")
         baseline = json.load(open(args.baseline))
         verified: dict[str, list[float]] = {}
         for name, _prev, t_cur in tc.compare_pairs(baseline, res):
@@ -249,14 +240,14 @@ def main() -> int:
         # stamp format and the consumer's read cannot drift apart
         # (r14 review: an inline copy could).
         res["_sf_dir"] = args.sf_dir
-        res["_table_rows"] = _load_script("scale_exponents").table_rows(args.sf_dir)
+        res["_table_rows"] = se.table_rows(args.sf_dir)
         # Code provenance (r14 review): fingerprints must describe the
         # tree the sweep MEASURED, not whichever tree later fits the
         # exponents — an edit between sweep and fit would otherwise get
         # a fresh stamp on stale readings.  Only the swept names are
         # stamped, so a --only partial sweep cannot certify names it
         # never timed.
-        _fps = _load_script("rewindow_check").current_fingerprints()
+        _fps = se.current_fingerprints()
         res["_code_fingerprints"] = {
             n: _fps[n] for n in res if not n.startswith("_") and n in _fps
         }

@@ -1,14 +1,11 @@
-"""The re-window rule is mechanical at EXECUTABLE granularity (verdict r6 #3).
+"""A query's code fingerprint changes at EXECUTABLE granularity.
 
-Round 6 burned two driver-evidence slots re-windowing queries whose only
-change was an import hoist.  scripts/rewindow_check.py compares
-docstring-stripped ASTs of top-level bindings and flags a query only
-when a DIRTY name is reachable from its builder — where dirtiness also
-propagates across repo-local imports (``from m import f`` is dirty iff
-``f`` changed in ``m``; ``import m`` is dirty iff anything changed in
-``m``), so a shared-helper change (tables.load, queries/_util) can
-never leave stale driver evidence standing, while comments, docstrings,
-and import position can never cost a slot.
+scripts/rewindow_check.py hashes the docstring-stripped ASTs of every
+top-level binding a builder can reach, following repo-local imports
+(``from m import f`` pulls ``f``'s closure in ``m``; ``import m`` pulls
+all of ``m``), so a shared-helper change (tables.load, queries/_util)
+always changes the fingerprint of every builder that uses it, while
+comments, docstrings and import position never do.
 """
 
 from __future__ import annotations
@@ -181,51 +178,73 @@ def register(name):
 '''
 
 
-def _analysis(mod, helper_base, helper_cur, registry_base=None, registry_cur=None):
-    return mod.RewindowAnalysis(
-        {
-            "discogs_etl_spark/tables.py": (helper_cur, helper_base),
-            "discogs_etl_spark/queries/q.py": (QUERY_MOD, QUERY_MOD),
-            "discogs_etl_spark/registry.py": (
-                registry_cur or REGISTRY_MOD,
-                registry_base or REGISTRY_MOD,
-            ),
-        }
+def _changed(base_sources, cur_sources, rel, fn) -> bool:
+    """Does builder ``fn`` in module ``rel`` fingerprint differently?"""
+    mod = _mod()
+    builders = {fn: (rel, fn)}
+    return mod.fingerprints(base_sources, builders) != mod.fingerprints(
+        cur_sources, builders
     )
+
+
+Q = "discogs_etl_spark/queries/q.py"
+
+
+def _sources(helper, registry=REGISTRY_MOD):
+    return {
+        "discogs_etl_spark/tables.py": helper,
+        Q: QUERY_MOD,
+        "discogs_etl_spark/registry.py": registry,
+    }
+
+
+def _edit(src: str, old: str, new: str) -> str:
+    assert src.count(old) == 1, old
+    return src.replace(old, new)
 
 
 def test_shared_helper_change_flags_importing_builders():
     # THE under-detection the r7 code review caught: tables.load changes,
-    # query module is textually untouched — q_one (uses load) must flag,
-    # q_three (pure) must not.
-    mod = _mod()
+    # query module is textually untouched — q_one (uses load) must
+    # change, q_three (pure) must not.
     changed_helper = HELPER_MOD.replace('sf + "/" + table', 'sf + "//" + table')
-    a = _analysis(mod, HELPER_MOD, changed_helper)
-    assert a.flagged("discogs_etl_spark/queries/q.py", "q_one") == {"load"}
-    assert a.flagged("discogs_etl_spark/queries/q.py", "q_three") == set()
+    base, cur = _sources(HELPER_MOD), _sources(changed_helper)
+    assert _changed(base, cur, Q, "q_one") is True
+    assert _changed(base, cur, Q, "q_three") is False
 
 
 def test_function_scoped_import_propagates_dirtiness():
-    mod = _mod()
     changed_helper = HELPER_MOD.replace("col * 1000", "col * 1_000_000")
-    a = _analysis(mod, HELPER_MOD, changed_helper)
-    assert a.flagged("discogs_etl_spark/queries/q.py", "q_two") == {"epoch"}
-    assert a.flagged("discogs_etl_spark/queries/q.py", "q_one") == set()
+    base, cur = _sources(HELPER_MOD), _sources(changed_helper)
+    assert _changed(base, cur, Q, "q_two") is True
+    assert _changed(base, cur, Q, "q_one") is False
 
 
 def test_registry_window_rotation_does_not_flag_queries():
-    # Query modules import only `register` from registry.py, so editing
-    # registry state `register` does not reach (the evidence-window
-    # ordering) must not dirty any builder.
-    mod = _mod()
+    # Query modules import only `register` (and, inside functions,
+    # `_REGISTRY`) from registry.py, so editing registry state those do
+    # not reach — the computed evidence-window order — must leave every
+    # query fingerprint unchanged.
     rotated = REGISTRY_MOD.replace('("a", "b")', '("c", "d")')
-    a = _analysis(mod, HELPER_MOD, HELPER_MOD, REGISTRY_MOD, rotated)
+    base, cur = _sources(HELPER_MOD), _sources(HELPER_MOD, rotated)
     for fn in ("q_one", "q_two", "q_three"):
-        assert a.flagged("discogs_etl_spark/queries/q.py", fn) == set()
+        assert _changed(base, cur, Q, fn) is False
+    # ...and on the real package: reverse the oldest-first window order.
+    mod = _mod()
+    reg = "discogs_etl_spark/registry.py"
+    tree = mod.tree_sources()
+    edited = dict(tree)
+    edited[reg] = _edit(
+        tree[reg],
+        "key=lambda n: last_green.get(n, 0)",
+        "key=lambda n: -last_green.get(n, 0)",
+    )
+    assert mod._top_level_defs(edited[reg], reg) != mod._top_level_defs(tree[reg], reg)
+    builders = mod.builder_locations()
+    assert mod.fingerprints(edited, builders) == mod.fingerprints(tree, builders)
 
 
 def test_whole_module_import_dirty_on_any_change():
-    mod = _mod()
     src = """
 import discogs_etl_spark.tables as tbl
 
@@ -233,52 +252,55 @@ def q_mod(spark, sf):
     return tbl.load(spark, sf, "orders")
 """
     changed_helper = HELPER_MOD.replace("col * 1000", "col * 999")
-    a = mod.RewindowAnalysis(
-        {
-            "discogs_etl_spark/tables.py": (changed_helper, HELPER_MOD),
-            "discogs_etl_spark/queries/q.py": (src, src),
-        }
-    )
-    # ANY change in a module imported wholesale dirties the alias — the
-    # tool cannot know which attributes get touched, so it over-flags.
-    assert a.flagged("discogs_etl_spark/queries/q.py", "q_mod") == {"tbl"}
+    # ANY change in a module imported wholesale changes the builder —
+    # the tool cannot know which attributes get touched, so it
+    # over-approximates.
+    assert _changed(
+        {"discogs_etl_spark/tables.py": HELPER_MOD, Q: src},
+        {"discogs_etl_spark/tables.py": changed_helper, Q: src},
+        Q,
+        "q_mod",
+    ) is True
 
 
 def test_import_cycle_terminates_with_own_changes():
-    mod = _mod()
     a_mod = "from discogs_etl_spark.b import g\n\ndef f():\n    return g()\n"
     b_mod = "from discogs_etl_spark.a import f\n\ndef g():\n    return 1\n"
     b_changed = b_mod.replace("return 1", "return 2")
-    a = mod.RewindowAnalysis(
-        {
-            "discogs_etl_spark/a.py": (a_mod, a_mod),
-            "discogs_etl_spark/b.py": (b_changed, b_mod),
-        }
-    )
-    assert a.flagged("discogs_etl_spark/a.py", "f") == {"g"}
+    assert _changed(
+        {"discogs_etl_spark/a.py": a_mod, "discogs_etl_spark/b.py": b_mod},
+        {"discogs_etl_spark/a.py": a_mod, "discogs_etl_spark/b.py": b_changed},
+        "discogs_etl_spark/a.py",
+        "f",
+    ) is True
 
 
-def test_round7_window_leads_with_rewindow_script_output():
-    # The registry's changed-this-round block must be exactly what the
-    # mechanical rule computed at window-composition time: the
-    # multimodal queries that ride the decode stage reach _decode_one
-    # (decode hardening touched _decode_one / decode_wav / decode_png).
-    # multimodal_phash_dedup left this set in the r15 banding rewrite:
-    # its 64-bit perceptual hash is computed in its OWN mapInPandas
-    # stage over with_payload (where a real pHash decoder slots in), so
-    # it reaches with_payload but no longer _decode_one.
+def test_decode_kernel_edit_changes_exactly_the_decode_stage_queries():
+    # An edit to _decode_one's body in the real multimodal.py changes
+    # the queries that ride the decode stage.  multimodal_phash_dedup
+    # computes its perceptual hash in its OWN mapInPandas stage over
+    # with_payload, so it does not reach _decode_one and keeps its
+    # fingerprint.
     mod = _mod()
-    src = (REPO / "discogs_etl_spark" / "multimodal.py").read_text()
-    for fn in (
+    rel = "discogs_etl_spark/multimodal.py"
+    tree = mod.tree_sources()
+    edited = dict(tree)
+    edited[rel] = _edit(
+        tree[rel],
+        "    if real:  # pragma: no cover - exercised directly in tests, not via conf",
+        "    if real and payload is not None:",
+    )
+    names = (
         "multimodal_decode_features",
         "multimodal_frame_sample",
         "multimodal_media_summary",
-    ):
-        reach = mod.reachable(src, fn)
-        assert "_decode_one" in reach, f"{fn} no longer reaches _decode_one"
-    reach = mod.reachable(src, "multimodal_phash_dedup")
-    assert "with_payload" in reach
-    assert "_decode_one" not in reach
+        "multimodal_phash_dedup",
+    )
+    builders = {n: loc for n, loc in mod.builder_locations().items() if n in names}
+    assert set(builders) == set(names)
+    before = mod.fingerprints(tree, builders)
+    after = mod.fingerprints(edited, builders)
+    assert {n for n in names if before[n] != after[n]} == set(names[:3])
 
 
 # ------------------------------------------ textual-invariance sweep ----
@@ -349,7 +371,6 @@ def test_member_import_flags_on_internal_helper_change():
     # 'from tables import load' where only load's INTERNAL helper
     # changed: the member's closure in the source module must be
     # followed, not just the member's own statement.
-    mod = _mod()
     helper = """
 def _resolve(sf, table):
     return sf + "/" + table
@@ -358,22 +379,17 @@ def load(spark, sf, table):
     return spark.read.parquet(_resolve(sf, table))
 """
     changed = helper.replace('sf + "/" + table', 'sf + "//" + table')
-    a = mod.RewindowAnalysis(
-        {
-            "discogs_etl_spark/tables.py": (changed, helper),
-            "discogs_etl_spark/queries/q.py": (QUERY_MOD, QUERY_MOD),
-        }
-    )
-    assert a.flagged("discogs_etl_spark/queries/q.py", "q_one") == {"load"}
-    assert a.flagged("discogs_etl_spark/queries/q.py", "q_three") == set()
+    base = {"discogs_etl_spark/tables.py": helper, Q: QUERY_MOD}
+    cur = {"discogs_etl_spark/tables.py": changed, Q: QUERY_MOD}
+    assert _changed(base, cur, Q, "q_one") is True
+    assert _changed(base, cur, Q, "q_three") is False
 
 
 def test_cycle_truncation_is_not_memoized():
     # A<->B import cycle plus changed module C imported by B: if A is
     # evaluated FIRST, its recursion into B runs under cycle truncation;
-    # caching that truncated answer would make a later direct
-    # dirty_names(B) return a poisoned empty set.  Results must be
-    # order-independent.
+    # reusing that truncated closure for B would drop C.  Results must
+    # be order-independent.
     mod = _mod()
     c_mod = "def cf():\n    return 1\n"
     c_changed = c_mod.replace("return 1", "return 2")
@@ -383,24 +399,23 @@ def test_cycle_truncation_is_not_memoized():
         "from discogs_etl_spark.c import cf\n\n"
         "def bf():\n    return cf()\n"
     )
+    base = {
+        "discogs_etl_spark/a.py": a_mod,
+        "discogs_etl_spark/b.py": b_mod,
+        "discogs_etl_spark/c.py": c_mod,
+    }
+    cur = {**base, "discogs_etl_spark/c.py": c_changed}
     for order in (("a", "b"), ("b", "a")):
-        an = mod.RewindowAnalysis(
-            {
-                "discogs_etl_spark/a.py": (a_mod, a_mod),
-                "discogs_etl_spark/b.py": (b_mod, b_mod),
-                "discogs_etl_spark/c.py": (c_changed, c_mod),
-            }
-        )
-        results = {m: an.flagged(f"discogs_etl_spark/{m}.py", f"{m}f") for m in order}
-        assert results["b"] == {"cf"}, f"order {order}: B lost C's dirtiness"
-        assert results["a"] == {"bf"}, f"order {order}: A lost B's transitive dirtiness"
+        builders = {m: (f"discogs_etl_spark/{m}.py", f"{m}f") for m in order}
+        old, new = mod.fingerprints(base, builders), mod.fingerprints(cur, builders)
+        assert old["b"] != new["b"], f"order {order}: B lost C's change"
+        assert old["a"] != new["a"], f"order {order}: A lost B's transitive change"
 
 
 def test_from_package_import_submodule_propagates():
     # 'from discogs_etl_spark import tables' — the member IS a module;
     # any change inside it must dirty the alias (registry.py uses this
     # exact pattern for multimodal/scale/events).
-    mod = _mod()
     src = """
 from discogs_etl_spark import tables
 
@@ -408,21 +423,19 @@ def q_sub(spark, sf):
     return tables.load(spark, sf, "orders")
 """
     changed_helper = HELPER_MOD.replace("col * 1000", "col * 999")
-    a = mod.RewindowAnalysis(
-        {
-            "discogs_etl_spark/__init__.py": ("", ""),
-            "discogs_etl_spark/tables.py": (changed_helper, HELPER_MOD),
-            "discogs_etl_spark/queries/q.py": (src, src),
-        }
-    )
-    assert a.flagged("discogs_etl_spark/queries/q.py", "q_sub") == {"tables"}
+    base = {
+        "discogs_etl_spark/__init__.py": "",
+        "discogs_etl_spark/tables.py": HELPER_MOD,
+        Q: src,
+    }
+    cur = {**base, "discogs_etl_spark/tables.py": changed_helper}
+    assert _changed(base, cur, Q, "q_sub") is True
 
 
 def test_same_alias_from_two_modules_unions_sources():
     # q_a and q_b both bind the local name 'helper' via function-scoped
     # imports from DIFFERENT modules; a change in either source module
     # must dirty the alias (first-import-wins dropped the second).
-    mod = _mod()
     src = """
 def q_a(spark, sf):
     from discogs_etl_spark.x import helper
@@ -435,14 +448,9 @@ def q_b(spark, sf):
     x_mod = "def helper(v):\n    return v + 1\n"
     y_mod = "def helper(v):\n    return v + 2\n"
     y_changed = y_mod.replace("v + 2", "v + 3")
-    a = mod.RewindowAnalysis(
-        {
-            "discogs_etl_spark/x.py": (x_mod, x_mod),
-            "discogs_etl_spark/y.py": (y_changed, y_mod),
-            "discogs_etl_spark/queries/q.py": (src, src),
-        }
-    )
-    assert a.flagged("discogs_etl_spark/queries/q.py", "q_b") == {"helper"}
+    base = {"discogs_etl_spark/x.py": x_mod, "discogs_etl_spark/y.py": y_mod, Q: src}
+    cur = {**base, "discogs_etl_spark/y.py": y_changed}
+    assert _changed(base, cur, Q, "q_b") is True
 
 
 def test_branch_bindings_accumulate_not_overwrite():
@@ -519,11 +527,10 @@ def test_unmodeled_statement_forms_index_the_sentinel():
 def test_unmodeled_change_flags_every_builder_in_module():
     # Changing a bare side-effect call must flag builders that never
     # mention it — the index cannot bound what it mutated.
-    mod = _mod()
     src = "def setup(): pass\nsetup()\n\ndef builder(spark, sf):\n    return 42\n"
     changed = src.replace("def setup(): pass", "def setup(): return 1")
-    a = mod.RewindowAnalysis({"discogs_etl_spark/m.py": (changed, src)})
-    assert mod.UNMODELED in a.flagged("discogs_etl_spark/m.py", "builder")
+    m = "discogs_etl_spark/m.py"
+    assert _changed({m: src}, {m: changed}, m, "builder") is True
 
 
 def test_unmodeled_multiplicity_is_visible():
@@ -552,8 +559,8 @@ def test_compound_with_binding_and_side_effect_is_unmodeled():
     defs = mod._top_level_defs(src)
     assert "x" in defs and mod.UNMODELED in defs
     changed = src.replace("setup()\ndef builder", "setup(2)\ndef builder")
-    a = mod.RewindowAnalysis({"discogs_etl_spark/m.py": (changed, src)})
-    assert mod.UNMODELED in a.flagged("discogs_etl_spark/m.py", "builder")
+    m = "discogs_etl_spark/m.py"
+    assert _changed({m: src}, {m: changed}, m, "builder") is True
 
 
 def test_compound_nested_side_effect_is_unmodeled():
@@ -570,35 +577,29 @@ def test_compound_nested_side_effect_is_unmodeled():
 UNMODELED_HELPER = "def helper(x): return x\nsetup_registry()\ndef setup_registry(): pass\n"
 
 
-def _unmodeled_analysis(mod, importer_src):
+def _unmodeled_changed(importer_src) -> bool:
     changed = UNMODELED_HELPER.replace("setup_registry()\n", "setup_registry(1)\n", 1)
-    return mod.RewindowAnalysis(
-        {
-            "discogs_etl_spark/tables.py": (changed, UNMODELED_HELPER),
-            "discogs_etl_spark/queries/q.py": (importer_src, importer_src),
-        }
+    return _changed(
+        {"discogs_etl_spark/tables.py": UNMODELED_HELPER, Q: importer_src},
+        {"discogs_etl_spark/tables.py": changed, Q: importer_src},
+        Q,
+        "builder",
     )
 
 
 def test_unmodeled_propagates_through_member_import():
-    mod = _mod()
     src = "from discogs_etl_spark.tables import helper\ndef builder(spark, sf):\n    return helper(1)\n"
-    a = _unmodeled_analysis(mod, src)
-    assert a.flagged("discogs_etl_spark/queries/q.py", "builder") == {"helper"}
+    assert _unmodeled_changed(src) is True
 
 
 def test_unmodeled_propagates_through_module_import():
-    mod = _mod()
     src = "import discogs_etl_spark.tables as tbl\ndef builder(spark, sf):\n    return tbl.helper(1)\n"
-    a = _unmodeled_analysis(mod, src)
-    assert a.flagged("discogs_etl_spark/queries/q.py", "builder") == {"tbl"}
+    assert _unmodeled_changed(src) is True
 
 
 def test_unmodeled_propagates_through_star_import():
-    mod = _mod()
     src = "from discogs_etl_spark.tables import *\ndef builder(spark, sf):\n    return helper(1)\n"
-    a = _unmodeled_analysis(mod, src)
-    assert mod.UNMODELED in a.flagged("discogs_etl_spark/queries/q.py", "builder")
+    assert _unmodeled_changed(src) is True
 
 
 def test_package_unmodeled_inventory():
@@ -635,8 +636,8 @@ def test_class_body_side_effect_is_unmodeled():
     assert mod.UNMODELED in mod._top_level_defs(src)
     # editing setup's body must flag builder (which mentions only Y)
     changed = src.replace("'fast'", "'slow'")
-    a = mod.RewindowAnalysis({"discogs_etl_spark/m.py": (changed, src)})
-    assert mod.UNMODELED in a.flagged("discogs_etl_spark/m.py", "builder")
+    m = "discogs_etl_spark/m.py"
+    assert _changed({m: src}, {m: changed}, m, "builder") is True
     # ...same one nesting level down, inside a compound
     nested = "flag = True\ndef setup(): pass\nif flag:\n    class C:\n        setup()\n"
     assert mod.UNMODELED in mod._top_level_defs(nested)
@@ -649,16 +650,11 @@ def test_star_import_deletion_flags():
     # Removing `from m import *` used to change no def dump AND remove
     # the propagation edge in the same breath — zero flags for a
     # behavior change (review r9).
-    mod = _mod()
     with_star = "from discogs_etl_spark.tables import *\ndef builder(spark, sf):\n    return helper(1)\n"
     without = "def builder(spark, sf):\n    return helper(1)\n"
-    a = mod.RewindowAnalysis(
-        {
-            "discogs_etl_spark/tables.py": (UNMODELED_HELPER, UNMODELED_HELPER),
-            "discogs_etl_spark/queries/q.py": (without, with_star),
-        }
-    )
-    assert mod.UNMODELED in a.flagged("discogs_etl_spark/queries/q.py", "builder")
+    tables = {"discogs_etl_spark/tables.py": UNMODELED_HELPER}
+    base, cur = {**tables, Q: with_star}, {**tables, Q: without}
+    assert _changed(base, cur, Q, "builder") is True
 
 
 def test_nested_star_import_deletion_flags():
@@ -687,10 +683,6 @@ def test_nested_star_import_deletion_flags():
     # the compound must index as unattributable on BOTH sides so the
     # star deletion dirties UNMODELED, not just x
     assert mod.UNMODELED in mod._top_level_defs(with_star)
-    a = mod.RewindowAnalysis(
-        {
-            "discogs_etl_spark/tables.py": (UNMODELED_HELPER, UNMODELED_HELPER),
-            "discogs_etl_spark/queries/q.py": (without, with_star),
-        }
-    )
-    assert mod.UNMODELED in a.flagged("discogs_etl_spark/queries/q.py", "builder")
+    tables = {"discogs_etl_spark/tables.py": UNMODELED_HELPER}
+    base, cur = {**tables, Q: with_star}, {**tables, Q: without}
+    assert _changed(base, cur, Q, "builder") is True

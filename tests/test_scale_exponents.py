@@ -22,10 +22,10 @@ SCALE_EXPONENTS.json is gated here:
   overhead-floor clamp with a material high reading, which would
   deflate a true quadratic below the flag), and
 * the artifact is MACHINE-TIED to query code: its per-query
-  code-closure fingerprints (rewindow_check AST machinery) must match
-  the working tree, so a rewritten query reddens until re-measured via
-  the targeted refresh path (time_registry --only + scale_exponents
-  --patch).
+  code-closure fingerprints (rewindow_check's fingerprint closure
+  rules) must match the working tree, so a rewritten query reddens
+  until re-measured via the targeted refresh path (time_registry
+  --only + scale_exponents --patch).
 """
 
 from __future__ import annotations
@@ -33,6 +33,8 @@ from __future__ import annotations
 import importlib.util
 import json
 from pathlib import Path
+
+import pytest
 
 from discogs_etl_spark import registry
 from discogs_etl_spark.tables import TABLE_NAMES
@@ -138,7 +140,7 @@ def test_table_names_are_the_engine_registry():
 
 def test_code_fingerprints_match_working_tree():
     # The machine tie to code: a rewritten query (or a change to any
-    # helper its builder reaches, per the rewindow closure rules) must
+    # helper its builder reaches, per the fingerprint closure rules) must
     # redden here until its rows are re-measured.  Comments/docstrings
     # are excluded by construction, so annotation-only edits don't
     # force a re-sweep.
@@ -322,31 +324,25 @@ def test_static_dims_do_not_mark_mixed_but_slow_planes_do():
 def test_fingerprints_resolve_from_sweep_stamps_not_fit_time():
     # The stamp must describe the code the sweeps MEASURED (r14 review:
     # an edit between sweep and fit would get a fresh stamp on stale
-    # readings).  Agreeing sweep stamps win over fit-time; disagreeing
-    # stamps yield NO stamp (stays stale until re-swept); unstamped
-    # legacy sweeps fall back to fit-time.
+    # readings), so only agreeing sweep stamps certify a row.
+    # Disagreeing, one-sided and missing stamps all land in mismatched:
+    # no stamp, stale until re-swept at both sfs.
     mod = _mod()
-    fit = {"a": "fit_a", "b": "fit_b", "c": "fit_c"}
     lo = {"_code_fingerprints": {"a": "sweep_a", "b": "old_b"}}
     hi = {"_code_fingerprints": {"a": "sweep_a", "b": "new_b"}}
-    fps, mismatched, notes = mod.resolve_fingerprints(
-        ["a", "b", "c"], lo, hi, fit
-    )
-    assert fps["a"] == "sweep_a"  # agreement: sweep stamp, not fit_a
-    assert "b" not in fps and mismatched == ["b"]
-    # 'c' is unstamped in BOTH stamped sweeps -> one-sided cannot apply;
-    # fit-time fallback is used and reported
-    assert fps["c"] == "fit_c" and "fit-time" in notes
-    # fully legacy sweeps: all fallback, no mismatches
-    fps2, mm2, n2 = mod.resolve_fingerprints(["a"], {}, {}, fit)
-    assert fps2 == {"a": "fit_a"} and mm2 == [] and n2 == {"fit-time"}
-    # one legacy + one stamped sweep: the single stamp is used but the
-    # unverified pairing is reported (a between-sweep edit would be
-    # invisible for these rows)
-    fps3, mm3, n3 = mod.resolve_fingerprints(
-        ["a"], {"_code_fingerprints": {"a": "sweep_a"}}, {}, fit
-    )
-    assert fps3 == {"a": "sweep_a"} and mm3 == [] and n3 == {"one-sided"}
+    fps, mismatched = mod.resolve_fingerprints(["a", "b", "c"], lo, hi)
+    assert fps == {"a": "sweep_a"}
+    assert mismatched == ["b", "c"]
+    # fully legacy sweeps: nothing is certified
+    assert mod.resolve_fingerprints(["a"], {}, {}) == ({}, ["a"])
+    # one legacy + one stamped sweep: a between-sweep edit would be
+    # invisible, so the single stamp certifies nothing
+    stamped = {"_code_fingerprints": {"a": "sweep_a"}}
+    assert mod.resolve_fingerprints(["a"], stamped, {}) == ({}, ["a"])
+    assert mod.resolve_fingerprints(["a"], {}, stamped) == ({}, ["a"])
+    # a sweep without its data-provenance stamp cannot be paired at all
+    with pytest.raises(SystemExit):
+        mod._check_provenance("--lo", {}, "sf_dir", {"orders": 1})
 
 
 def test_oracle_table_extraction_survives_apostrophe_in_comment():
